@@ -9,8 +9,7 @@ import graft.queries.{Extra7, Extra9, ScaleOps}
   * REBUILD (the cold-JVM status quo before round 17), SAVE (one-time
   * artifact write), LOAD (what a restarted driver now pays) — for the
   * graph family and the ANN index, at a given sf dir. The numbers land
-  * in PERF.md; a local measurement aid like [[ProfileKcore]], not part
-  * of the driver contract.
+  * in PERF.md; a local measurement aid.
   *
   * Usage: `sbt "runMain graft.ProfileColdLoad [sfDir]"`.
   */

@@ -8,8 +8,7 @@ import org.apache.spark.storage.StorageLevel
   * wedge join's row count, the orientation's lever) under id-order vs
   * degree-order at a given dial, plus optionally the timed enumeration
   * under both (counts are orientation-independent, spec-pinned, so the
-  * same oracle passes either way). A local iteration aid like
-  * [[ProfileKcore]]; not part of the driver contract.
+  * same oracle passes either way). A local iteration aid.
   *
   * Usage: `sbt "runMain graft.ProfileTriangles [sfDir] [time]"` — the
   * optional `time` second arg also runs the full enumeration twice.

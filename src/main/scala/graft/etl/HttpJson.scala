@@ -30,7 +30,13 @@ object HttpJson {
 
   private val RequestTimeout = Duration.ofSeconds(60)
 
-  private def client: HttpClient =
+  /** The one client behind every HTTP call here and in `graft-http`,
+    * built on first use. Each client owns a selector thread that lives
+    * until the client is garbage-collected, so a client per call,
+    * partition, reader or write task leaked threads; HttpClient is
+    * thread-safe and pools connections per host.
+    */
+  private[graft] lazy val client: HttpClient =
     HttpClient.newBuilder().connectTimeout(Duration.ofSeconds(30)).build()
 
   /** Decode a JSON-array payload against an explicit row `schema` —
@@ -85,9 +91,7 @@ object HttpJson {
           .header("X-Batch-Id",
             java.util.UUID.nameUUIDFromBytes(body.getBytes("UTF-8")).toString)
         headerSeq.foreach { case (k, v) => b.header(k, v) }
-        val resp = HttpClient.newBuilder()
-          .connectTimeout(Duration.ofSeconds(30)).build()
-          .send(b.build(), HttpResponse.BodyHandlers.ofString())
+        val resp = client.send(b.build(), HttpResponse.BodyHandlers.ofString())
         require(resp.statusCode() / 100 == 2, s"sink POST failed: ${resp.statusCode()}")
       }
     }

@@ -26,7 +26,7 @@ import org.apache.spark.sql.functions._
   * frontier form subtracts the visited set each round, which makes
   * round h's plan reference the accumulated state TWICE (anti-join +
   * union) and doubles the lazy plan per round — the stats-squaring
-  * trap [[Checkpoints.snap]] exists for. The level-set form references
+  * trap [[Iterate.snap]] bounds. The level-set form references
   * each level exactly ONCE downstream, so `maxHops` rounds chain into
   * one lazy linear-depth plan (a single scheduled job, no driver
   * loop), at the price of re-expanding already-settled nodes — bounded

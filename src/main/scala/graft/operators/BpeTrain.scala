@@ -34,7 +34,7 @@ import org.apache.spark.sql.functions._
   * plans ONE exchange + one sort for the lot), one map-side-combined
   * pair aggregate, and a 1-row collect (the bounded driver value —
   * the graph_pagerank nNodes precedent); state re-materializes per
-  * round through [[Checkpoints.snap]] with superseded generations
+  * round through [[Iterate.snap]] with superseded generations
   * freed (the iterative-operator discipline — the per-round best is
   * consumed by the NEXT round's plan, so lazy chaining is unavailable,
   * exactly Lloyd's/KCore's shape). Words as partition keys are the
@@ -63,31 +63,19 @@ object BpeTrain {
     require(merges >= 1, s"merges must be >= 1, got $merges")
     val spark = words.sparkSession
     val wOrder = Window.partitionBy(col("w")).orderBy(col("p"))
-    // Round-19 (guide §2.4): checkpoint DIRECTLY, without
-    // [[Checkpoints.snap]]'s stats-resetting wrapper — the wrapper's
-    // raw-RDD re-wrap DROPS the physical (w)-hash partitioning, so
-    // every round's first (w) window re-exchanged the symbol state
-    // (plans/r19: 36 hashpartitioning(w) exchanges across one
-    // text_bpe_encode run; ~2 per training round). A bare
-    // localCheckpoint keeps the partitioning in its LogicalRDD leaf and
-    // each round's windows ride it. snap's stats-squaring rationale
-    // does not apply here: every round's plan references the state
-    // exactly ONCE (best-pair and applyMerge are separate actions), so
-    // the size estimate carries, never compounds.
-    def snapped(df: DataFrame): (DataFrame, DataFrame) = {
-      val chk = df.localCheckpoint()
-      (chk, chk)
-    }
+    // Each round's first (w) window rides the state's (w)-hash
+    // partitioning: Iterate.snap keeps the final plan's partitioning in
+    // its leaf, so the symbol state is never re-exchanged per round.
     // character seed: one row per (word, position), weighted by count —
     // already (w)-clustered by the caller's word-count aggregate
-    var st = snapped(words
+    var st = Iterate.snap(words
       .select(col("w"), col("c"),
         explode(sequence(lit(1), length(col("w")))).as("p"))
       .select(col("w"), col("c"), col("p"),
         col("w").substr(col("p"), lit(1)).as("t")))
     val learned = scala.collection.mutable.ArrayBuffer[(Int, String, String, String, Long)]()
     for (step <- 1 to merges) {
-      val best = st._1
+      val best = st
         .withColumn("r", lead(col("t"), 1).over(wOrder))
         .filter(col("r").isNotNull)
         .groupBy(col("t").as("l"), col("r"))
@@ -100,12 +88,12 @@ object BpeTrain {
       val (l, r, f) = (best(0).getString(0), best(0).getString(1),
         best(0).getLong(2))
       learned += ((step, l, r, l + r, f))
-      val nextSnap = snapped(applyMerge(st._1, l, r))
-      Checkpoints.free(st._2)
-      st = nextSnap
-      if (roundHook != null) roundHook(step, st._1.count())
+      val next = Iterate.snap(applyMerge(st, l, r))
+      Iterate.free(st)
+      st = next
+      if (roundHook != null) roundHook(step, st.count())
     }
-    Checkpoints.free(st._2)
+    Iterate.free(st)
     import spark.implicits._
     learned.toSeq.toDF("step", "l", "r", "merged", "freq")
   }
@@ -143,7 +131,8 @@ object BpeTrain {
 
   /** ENCODE with a learned merge table: apply `merges` (ordered (l, r)
     * pairs, driver-side — a merge table is tokenizer metadata, k rows)
-    * to every distinct word and return (w, n_bpe) token counts.
+    * to every distinct word and return (w, n_bpe) token counts; a null
+    * word gets a null count.
     *
     * Round-19 shape (optimization guide §1.2 "per-task work" after the
     * round-18 plans showed the cost was STRUCTURE, not bytes): the old
@@ -162,18 +151,21 @@ object BpeTrain {
   def encodeWords(words: DataFrame, merges: Seq[(String, String)]): DataFrame = {
     val bc = words.sparkSession.sparkContext.broadcast(merges.toArray)
     val nBpe = udf { (w: String) =>
-      var toks: Vector[String] = w.map(_.toString).toVector
-      bc.value.foreach { case (l, r) =>
-        val out = scala.collection.mutable.ArrayBuffer[String]()
-        var i = 0
-        while (i < toks.length) {
-          if (i + 1 < toks.length && toks(i) == l && toks(i + 1) == r) {
-            out += l + r; i += 2
-          } else { out += toks(i); i += 1 }
+      if (w == null) null
+      else {
+        var toks: Vector[String] = w.map(_.toString).toVector
+        bc.value.foreach { case (l, r) =>
+          val out = scala.collection.mutable.ArrayBuffer[String]()
+          var i = 0
+          while (i < toks.length) {
+            if (i + 1 < toks.length && toks(i) == l && toks(i + 1) == r) {
+              out += l + r; i += 2
+            } else { out += toks(i); i += 1 }
+          }
+          toks = out.toVector
         }
-        toks = out.toVector
+        java.lang.Long.valueOf(toks.length.toLong)
       }
-      toks.length.toLong
     }
     words.select(col("w"), nBpe(col("w")).as("n_bpe"))
   }

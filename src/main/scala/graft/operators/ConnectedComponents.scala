@@ -13,9 +13,9 @@ import org.apache.spark.sql.functions._
   * 2-3 rounds close them; the published escalation for long-chain graphs
   * at 100 TB is large-star/small-star (Kiveris et al., "Connected
   * Components in MapReduce and Beyond"), which squares the paths per
-  * round. Every round localCheckpoints: iterative plans otherwise stack
-  * lineage until the optimizer chokes — the standard Spark iterative-
-  * algorithm discipline.
+  * round. Both forms run on [[Iterate.fixedPoint]]: every round is
+  * snapped (lazy chaining would stack lineage until the optimizer
+  * chokes) and a one-row digest gates the exact convergence check.
   */
 object ConnectedComponents {
   /** Rounds the last [[components]]/[[componentsStar]] call took to
@@ -77,27 +77,12 @@ object ConnectedComponents {
       val self = m.select(col("src"), col("m").as("dst"))
       viaNbr.union(self).filter(col("src") =!= col("dst")).distinct()
     }
-    var e = edges.select(col("src"), col("dst"))
-      .filter(col("src") =!= col("dst")).distinct().localCheckpoint()
-    var round = 0
-    var converged = false
-    var eFp = fingerprint(e, "src", "dst")
-    while (!converged && round < maxIterations) {
-      val next = smallStar(largeStar(e)).localCheckpoint()
-      // Converged when the star set is stable (same canonical edge set).
-      // The exact set-equality check (`except` = another full distinct
-      // shuffle) runs per ROUND, so gate it behind an order-independent
-      // one-row fingerprint (count + bit_xor of row hashes — one map-side
-      // agg job): differing fingerprints prove the sets differ and skip
-      // the expensive check; equal fingerprints are confirmed exactly, so
-      // a collision can never yield a wrong result, only one extra check.
-      val nextFp = fingerprint(next, "src", "dst")
-      converged = nextFp == eFp && next.except(e).limit(1).count() == 0
-      e = next
-      eFp = nextFp
-      round += 1
-    }
-    lastRounds = round
+    // converged when the star set is stable (same canonical edge set)
+    val (e, rounds) = Iterate.fixedPoint(
+      edges.select(col("src"), col("dst"))
+        .filter(col("src") =!= col("dst")).distinct(),
+      maxIterations)(e => smallStar(largeStar(e)))
+    lastRounds = rounds
     // stars are (child → root); roots label themselves
     val children = e.select(col("src").as("v"), col("dst").as("c"))
     val roots = e.select(col("dst").as("v")).distinct()
@@ -105,58 +90,27 @@ object ConnectedComponents {
     children.union(roots).distinct()
   }
 
-  /** Order-independent one-row digest of a 2-column frame: (row count,
-    * bit_xor of per-row xxhash64). Computed with one map-side-combining
-    * agg job — no shuffle of the data itself. bit_xor (not sum) because
-    * ANSI mode makes `sum(BIGINT)` overflow an error, while xor is
-    * closed, commutative, and order-independent.
-    */
-  private def fingerprint(df: DataFrame, a: String, b: String): (Long, Long) = {
-    val r = df.agg(
-      count(lit(1)).as("n"),
-      coalesce(bit_xor(xxhash64(col(a), col(b))), lit(0L)).as("x")).head()
-    (r.getLong(0), r.getLong(1))
-  }
-
   def components(edges: DataFrame, maxIterations: Int = 20): DataFrame = {
-    // Round-19 (guide §2.4): checkpoint the symmetrized edge relation
-    // PRE-PARTITIONED on dst — the per-round propagate join's key.
-    // localCheckpoint preserves the physical partitioning in its
-    // LogicalRDD leaf, so every round's join sees the EDGE side already
-    // clustered and only exchanges the node-sized label state; before,
-    // each round's fresh job re-shuffled the edge relation (rounds are
-    // separate actions — ReusedExchange never applies across them).
-    val sym = edges.select(col("src"), col("dst"))
+    // The symmetrized edge relation is snapped PRE-PARTITIONED on dst,
+    // the per-round propagate join's key. Iterate.snap keeps that
+    // partitioning in its leaf, so every round's join sees the edge
+    // side already clustered and exchanges only the node-sized labels
+    // (rounds are separate actions, so ReusedExchange never applies
+    // across them).
+    val sym = Iterate.snap(edges.select(col("src"), col("dst"))
       .union(edges.select(col("dst").as("src"), col("src").as("dst")))
-      .repartition(col("dst"))
-      .localCheckpoint()
-    var labels = sym.select(col("src").as("v")).distinct()
-      .withColumn("c", col("v"))
-      .localCheckpoint()
-    var round = 0
-    var converged = false
-    var labelsFp = fingerprint(labels, "v", "c")
-    while (!converged && round < maxIterations) {
+      .repartition(col("dst")))
+    val (labels, rounds) = Iterate.fixedPoint(
+      sym.select(col("src").as("v")).distinct().withColumn("c", col("v")),
+      maxIterations) { labels =>
       val viaNbr = sym.join(labels, sym("dst") === labels("v"))
         .groupBy(col("src")).agg(min(col("c")).as("nc"))
-      val next = labels.join(viaNbr, labels("v") === viaNbr("src"), "left")
+      labels.join(viaNbr, labels("v") === viaNbr("src"), "left")
         .select(labels("v").as("v"),
           least(col("c"), coalesce(col("nc"), col("c"))).as("c"))
-        .localCheckpoint()
-      // Same fingerprint gate as componentsStar: only run the exact
-      // changed-rows join when the one-row digest says "maybe equal".
-      val nextFp = fingerprint(next, "v", "c")
-      converged = nextFp == labelsFp && {
-        next.alias("n")
-          .join(labels.alias("o"), col("n.v") === col("o.v"))
-          .filter(col("n.c") =!= col("o.c"))
-          .limit(1).count() == 0
-      }
-      labels = next
-      labelsFp = nextFp
-      round += 1
     }
-    lastRounds = round
+    Iterate.free(sym)
+    lastRounds = rounds
     labels
   }
 }

@@ -312,10 +312,10 @@ object Ivf {
     *      LEFT-joined back to the previous state so empty cells keep
     *      their centroid (the [[stepArrays]] rule).
     *
-    * Each round's state is `localCheckpoint`ed (executor-resident
-    * blocks, O(nlist·d) TOTAL — not driver heap) so lineage cannot
-    * stack across rounds; convergence is a changed-cell count per round
-    * (one scalar to the driver — the CC convergence-digest idea).
+    * Rounds run on [[Iterate.fixedPoint]]: each round's state is
+    * snapped (executor-resident blocks, O(nlist·d) TOTAL — not driver
+    * heap, with the superseded round freed) so lineage cannot stack
+    * across rounds, and convergence is the one-row state digest.
     *
     * Contract differences from the exact path, both inherent to scale
     * and documented rather than hidden: init is a hash-thresholded
@@ -327,9 +327,6 @@ object Ivf {
     * the spec's setting). A train row whose probed groups contain no
     * fine cell skips the round, like [[stepArrays]]' null-cell drop.
     */
-  /** Superseded-round checkpoint release — see [[Checkpoints.free]]. */
-  private def freeLocalCheckpoint(df: DataFrame): Unit = Checkpoints.free(df)
-
   def centroidsDF(data: DataFrame, nlist: Int, iters: Int = 8,
                   trainSample: Int = 0, wProbe: Int = 2): DataFrame = {
     val spark = data.sparkSession
@@ -356,16 +353,19 @@ object Ivf {
       val m = 1000000L
       val cut = math.max(math.min(m,
         math.round(nlist.toDouble / math.max(total, 1L) * m)), 1L)
-      var cents = train.filter(col("e").isNotNull &&
-          pmod(xxhash64(col("vec_id")), lit(m)) < lit(cut))
-        .select(col("vec_id").as("cell"), col("e").as("centroid"))
-        .localCheckpoint()
-
-      var round = 0
-      var converged = false
-      while (!converged && round < iters) {
+      // a round's routing broadcasts live until its state is snapped:
+      // released when the next round starts, or after the loop
+      var roundBcs: Seq[org.apache.spark.broadcast.Broadcast[_]] = Nil
+      def releaseRoundBcs(): Unit = { roundBcs.foreach(_.destroy()); roundBcs = Nil }
+      val (cents, rounds) = try Iterate.fixedPoint(
+        train.filter(col("e").isNotNull &&
+            pmod(xxhash64(col("vec_id")), lit(m)) < lit(cut))
+          .select(col("vec_id").as("cell"), col("e").as("centroid")),
+        iters) { cents =>
+        releaseRoundBcs()
         val (routeFn, bcR) = nearestCellsFnH(cents, cIds, cVecs, 1)
         val (probeFn, bcP) = nearestCellsFnH(train, cIds, cVecs, 1 + wProbe)
+        roundBcs = bcR.toSeq ++ bcP.toSeq
         val centsG = cents.withColumn("group",
           element_at(routeFn(col("centroid")), 1))
         val assigned = train
@@ -380,30 +380,13 @@ object Ivf {
         val sums = assigned.groupBy(col("cell"))
           .agg(call_function("vec_sum", col("e")).as("s"),
             count(lit(1)).as("cnt"))
-        val next =
-          try cents.join(sums, Seq("cell"), "left")
-            .select(col("cell"),
-              when(col("cnt").isNotNull,
-                transform(col("s"), (x: Column) => x / col("cnt")))
-                .otherwise(col("centroid")).as("centroid"))
-            .localCheckpoint()
-          finally { bcR.foreach(_.destroy()); bcP.foreach(_.destroy()); () }
-        val changed = next.alias("n")
-          .join(cents.alias("p"), Seq("cell"))
-          .filter(col("n.centroid") =!= col("p.centroid"))
-          .count()
-        // `next` is materialized (eager localCheckpoint) and `changed`
-        // has consumed the old state — free the superseded round's
-        // blocks NOW. Without this each round's O(nlist·d) state stays
-        // block-manager resident until GC triggers the ContextCleaner,
-        // so several rounds coexist (~4 GB each at the 10⁶-cell/512-dim
-        // dial), at odds with the O(nlist·d) TOTAL claim (r11 ADVICE).
-        freeLocalCheckpoint(cents)
-        cents = next
-        converged = changed == 0L
-        round += 1
-      }
-      lastRounds = round
+        cents.join(sums, Seq("cell"), "left")
+          .select(col("cell"),
+            when(col("cnt").isNotNull,
+              transform(col("s"), (x: Column) => x / col("cnt")))
+              .otherwise(col("centroid")).as("centroid"))
+      } finally releaseRoundBcs()
+      lastRounds = rounds
       cents
     } finally if (trainPersisted) { train.unpersist(); () }
   }

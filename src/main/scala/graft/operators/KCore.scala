@@ -43,13 +43,11 @@ import org.apache.spark.storage.StorageLevel
   * adjacency streams map-side) + one window rank + one max whose
   * groupBy REUSES the window's (v)-hash exchange — so scheduling/
   * checkpoint overhead amortizes 8×, and H(x) references x exactly
-  * ONCE, keeping the chained plan linear in steps. Outer-round state
-  * is localCheckpoint'ed with superseded blocks freed eagerly
-  * ([[Checkpoints.free]], the PageRank/Lloyd discipline) — O(nodes)
-  * resident. Convergence = zero estimates changed across an outer
-  * round (monotonicity makes the fixed point detectable exactly; no
-  * digest needed). No broadcast-nested-loop anywhere (gate-pinned in
-  * PlanSpec).
+  * ONCE, keeping the chained plan linear in steps. Outer rounds run on
+  * [[Iterate.fixedPoint]] (snapped state, superseded round freed —
+  * O(nodes) resident; a one-row digest per round instead of a
+  * changed-row join). No broadcast-nested-loop anywhere (gate-pinned
+  * in PlanSpec).
   *
   * Contract (shared with [[Triangles]]): `edges` is one row per
   * undirected edge (a, b), deduped; orientation is irrelevant here
@@ -57,25 +55,6 @@ import org.apache.spark.storage.StorageLevel
   * (a node outside every edge has core 0 by convention and no row).
   */
 object KCore {
-  /** Eagerly materialize a round's state AND reset its statistics.
-    *
-    * `localCheckpoint` truncates LINEAGE but snapshots the origin
-    * plan's size ESTIMATE into the new leaf, and the convergence diff
-    * references each round's state twice — left to compound, the
-    * snapshot SQUARES round over round: by round ~25 the size-only
-    * stats visitor is multiplying million-digit BigIntegers and the
-    * DRIVER livelocks in Toom-Cook multiplication before any executor
-    * work (observed on the first cut: sf0.1 hung at 100% of one core;
-    * sf0.01 converges in few enough rounds to stay under the blowup).
-    * Wrapping the checkpointed rows in a fresh DataFrame resets the
-    * estimate to the session default, making per-round stats O(plan),
-    * not O(2^round). Returns (wrapped, checkpoint) — the checkpoint
-    * handle is what [[Checkpoints.free]] must release (the wrapper's
-    * leaf is a derived RDD, not the cached blocks).
-    */
-  private def snap(df: DataFrame): (DataFrame, DataFrame) =
-    Checkpoints.snap(df)
-
   /** One h-index step over a symmetrized adjacency: every estimate
     * becomes the h-index of its neighbours' estimates. References
     * `state` exactly once (chaining k steps builds a depth-k plan, not
@@ -149,37 +128,26 @@ object KCore {
     */
   def coreNumbers(edges: DataFrame, maxIterations: Int = 64,
                   stateBroadcastThreshold: Long = 4000000L,
-                  stepsPerRound: Int = 8,
-                  roundHook: (Int, Long) => Unit = (_, _) => ()): DataFrame = {
+                  stepsPerRound: Int = 8): DataFrame = {
     require(stepsPerRound >= 1, s"stepsPerRound must be >= 1: $stepsPerRound")
     // symmetrized adjacency feeds every step → persist once
     val adj = edges.select(col("a").as("v"), col("b").as("n"))
       .unionAll(edges.select(col("b").as("v"), col("a").as("n")))
       .persist(StorageLevel.MEMORY_AND_DISK)
-    // round 0: estimate = degree (the h-index seed)
-    var (est, estChk) = snap(adj.groupBy(col("v"))
-      .agg(count(lit(1)).cast("int").as("c")))
-    val nNodes = est.count()
-    val bcastState = nNodes <= stateBroadcastThreshold
-    var round = 0
-    var changed = nNodes
-    while (changed > 0 && round * stepsPerRound < maxIterations) {
-      val chained = (1 to stepsPerRound).foldLeft(est)((x, _) =>
-        hStep(adj, x, bcastState))
-      val (next, nextChk) = snap(chained)
-      // monotone decrease makes the diff a plain count; this terminal
-      // action references est + next once each and is never chained
-      // into lineage
-      changed = next.alias("nx")
-        .join(est.alias("pv"), Seq("v"))
-        .filter(col("nx.c") =!= col("pv.c")).count()
-      Checkpoints.free(estChk)
-      est = next
-      estChk = nextChk
-      round += 1
-      roundHook(round, changed)
+    val maxRounds = (maxIterations + stepsPerRound - 1) / stepsPerRound
+    // decided once, on the snapped degree seed the first round reads
+    var bcastState: Option[Boolean] = None
+    // round 0: estimate = degree (the h-index seed). One round past the
+    // cap tells "converged on the last allowed round" (stops within
+    // maxRounds) from "still moving" (runs them all).
+    val (est, rounds) = Iterate.fixedPoint(
+      adj.groupBy(col("v")).agg(count(lit(1)).cast("int").as("c")),
+      maxRounds + 1) { st =>
+      val bcast = bcastState.getOrElse(st.count() <= stateBroadcastThreshold)
+      bcastState = Some(bcast)
+      (1 to stepsPerRound).foldLeft(st)((x, _) => hStep(adj, x, bcast))
     }
-    require(changed == 0,
+    require(rounds <= maxRounds,
       s"k-core h-index iteration still moving after $maxIterations steps " +
         "— raise maxIterations (result would be an upper bound, not the core)")
     adj.unpersist(false)

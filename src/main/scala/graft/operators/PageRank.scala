@@ -17,42 +17,27 @@ import org.apache.spark.storage.StorageLevel
   *     Rank mass is then conserved every round (PageRankSpec checks
   *     Σpr ≈ 1 up to grid rounding).
   *   - CONVERGENCE EARLY-EXIT: the query runs a fixed oracle-checkable
-  *     round count; callers who want "iterate to fixed point" get the
-  *     ConnectedComponents digest discipline — per round a one-row
-  *     order-independent fingerprint (count + bit_xor of row hashes) of
-  *     the SNAPPED ranks; differing fingerprints prove non-convergence
-  *     for free, equal ones are confirmed with an exact changed-row
-  *     probe before stopping (a hash collision can cost one extra
-  *     check, never a wrong early stop). Snapping to the 1e-`snap` grid
-  *     is what makes a bit-exact fixed point reachable at all.
-  *   - CHECKPOINT-AND-FREE: unlike the query's lazily-chained fixed
-  *     rounds (state consumed exactly once — one scheduled job), the
-  *     convergence test reads each round's state TWICE (fingerprint +
-  *     next-round join), so every round materializes via
-  *     localCheckpoint and the superseded round's blocks are freed
-  *     ([[Checkpoints.free]], the Ivf Lloyd discipline) — residency is
-  *     ONE round's O(nodes) at any time.
+  *     round count; callers who want "iterate to fixed point" get
+  *     [[Iterate.fixedPoint]]: every round's ranks are snapped, a
+  *     one-row digest proves non-convergence, and equal digests are
+  *     confirmed exactly before stopping. Snapping to the 1e-`snap`
+  *     grid is what makes a bit-exact fixed point reachable at all.
+  *     The superseded round is freed, so residency is ONE round's
+  *     O(nodes) at any time.
   *
   * Scale shape per round: one node-keyed join (ranks ⋈ degrees), one
   * edge-keyed fan-out join whose groupBy(dst) map-side combines to a
   * node-sized wire, one left join back to the full node set (nodes
   * with no in-edges keep teleport+dangling rank — the query's
   * groupBy(dst) form silently drops them, correct only when every node
-  * has in-edges), and two one-row digests. Only O(1) per round reaches
-  * the driver (N once, the dangling sum, the fingerprint).
+  * has in-edges), and two one-row aggregates. Only O(1) per round
+  * reaches the driver (N once, the dangling sum, the digest).
   */
 object PageRank {
   /** Rounds the last [[ranks]] call took (diagnostic, the
     * ConnectedComponents.lastRounds convention).
     */
   @volatile private[graft] var lastRounds: Int = 0
-
-  private def fingerprint(df: DataFrame): (Long, Long) = {
-    val r = df.agg(
-      count(lit(1)).as("n"),
-      coalesce(bit_xor(xxhash64(col("node"), col("pr"))), lit(0L)).as("x")).head()
-    (r.getLong(0), r.getLong(1))
-  }
 
   /** (node, pr) at the fixed point (or after `maxIterations`). `edges`
     * needs (src, dst); self-loops and duplicate edges count like any
@@ -75,13 +60,9 @@ object PageRank {
       val n = nodes.count()
       require(n > 0, "PageRank over an empty graph")
       val teleport = (1.0 - damping) / n
-      var ranks = nodes
-        .select(col("node"), round(lit(1.0 / n), snap).as("pr"))
-        .localCheckpoint()
-      var fp = fingerprint(ranks)
-      var round_ = 0
-      var converged = false
-      while (!converged && round_ < maxIterations) {
+      val (ranks, rounds) = Iterate.fixedPoint(
+        nodes.select(col("node"), round(lit(1.0 / n), snap).as("pr")),
+        maxIterations) { ranks =>
         // per-SOURCE weight first (node-sized join), then one edge join
         // fans it out — never pr/outdeg recomputed per edge
         val w = ranks.join(deg, "node")
@@ -93,27 +74,14 @@ object PageRank {
         // one column-pruned anti-join + one-row aggregate
         val dangling = ranks.join(deg.select(col("node")), Seq("node"), "left_anti")
           .agg(coalesce(sum(col("pr")), lit(0.0))).head().getDouble(0)
-        val next = nodes
+        nodes
           .join(contrib, Seq("node"), "left")
           .select(col("node"),
             round(lit(teleport) +
               lit(damping) * (coalesce(col("contrib"), lit(0.0)) +
                 lit(dangling / n)), snap).as("pr"))
-          .localCheckpoint()
-        val nextFp = fingerprint(next)
-        // digest gate (the ConnectedComponents rule): only run the exact
-        // changed-row probe when the one-row digest says "maybe equal"
-        converged = nextFp == fp && {
-          next.alias("a").join(ranks.alias("b"), col("a.node") === col("b.node"))
-            .filter(col("a.pr") =!= col("b.pr"))
-            .limit(1).count() == 0
-        }
-        Checkpoints.free(ranks) // superseded round's blocks, eagerly
-        ranks = next
-        fp = nextFp
-        round_ += 1
       }
-      lastRounds = round_
+      lastRounds = rounds
       ranks
     } finally {
       e.unpersist(false); deg.unpersist(false); nodes.unpersist(false); ()

@@ -330,13 +330,13 @@ object Extra9 {
     // The stage AFTER training: tokenize the corpus with the learned
     // merges — per-doc BPE token counts, the number a token-budget
     // planner (sample_epoch_plan) actually wants. Standalone contract:
-    // the query re-trains its 8 merges, then ENCODES — and encoding is
-    // the trainer's applyMerge chained LAZILY 8 times over the
-    // vocab-sized distinct-word state (no per-round data dependence ⇒
-    // one plan, no driver actions — the designed contrast to training's
-    // snapshot-per-round shape). The corpus pays one word-explode pass
-    // and one broadcast-ish join back; everything between is
-    // vocab-sized ([[graft.operators.BpeTrain.encodeWords]]).
+    // the query re-trains its 8 merges, then ENCODES — and encoding
+    // broadcasts the 8-row merge table and replays it per DISTINCT word
+    // in one row-local pass (no per-round data dependence ⇒ no
+    // exchanges, no sorts, no driver actions — the designed contrast to
+    // training's snapshot-per-round shape). The corpus pays one
+    // word-explode pass and one broadcast-ish join back; everything
+    // between is vocab-sized ([[graft.operators.BpeTrain.encodeWords]]).
     "text_bpe_encode" -> { (s, dir) =>
       // spread before the word explode (round-18, Tables.spread): the
       // tokenize pass otherwise serializes on the fixture's one-task scan

@@ -1,7 +1,7 @@
 package graft.sources
 
 import java.net.URI
-import java.net.http.{HttpClient, HttpRequest, HttpResponse}
+import java.net.http.{HttpRequest, HttpResponse}
 import java.time.Duration
 import java.util
 
@@ -19,6 +19,8 @@ import org.apache.spark.sql.sources.DataSourceRegister
 import org.apache.spark.sql.types.StructType
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 import org.apache.spark.unsafe.types.UTF8String
+
+import graft.etl.HttpJson
 
 /** Partitioned HTTP DataSource V2 — the at-scale form of the reference's
   * snapshot GET (task.ts:112-117; SURVEY.md §2.1 R1): when the upstream
@@ -331,16 +333,11 @@ private[sources] class HttpMicroBatchStream(
 
   import org.apache.spark.sql.connector.read.streaming.Offset
 
-  // one client for the stream's lifetime — latestOffset fires every
-  // trigger and must not churn connection pools on the driver
-  private val client = HttpClient.newBuilder()
-    .connectTimeout(Duration.ofSeconds(30)).build()
-
   private def currentCount(): Long = {
     val b = HttpRequest.newBuilder(URI.create(countUrl)).GET()
       .timeout(Duration.ofSeconds(30))
     headers.foreach { case (k, v) => b.header(k, v) }
-    val resp = client.send(b.build(), HttpResponse.BodyHandlers.ofString())
+    val resp = HttpJson.client.send(b.build(), HttpResponse.BodyHandlers.ofString())
     require(resp.statusCode() / 100 == 2,
       s"graft-http count GET $countUrl failed: HTTP ${resp.statusCode()}")
     resp.body().trim.toLong
@@ -420,8 +417,8 @@ private[sources] class HttpRangeReaderFactory(
   }
 }
 
-/** Shared per-reader fetch plumbing (one HttpClient + JacksonParser;
-  * one GET per page) for the batch and streaming readers — the retry/
+/** Shared per-reader fetch plumbing (the shared client + one
+  * JacksonParser; one GET per page) for the batch and streaming readers — the retry/
   * auth/timeout policy lives in exactly one place.
   *
   * Transient failures (5xx, 429, connection errors) retry with
@@ -474,9 +471,6 @@ private[sources] class HttpPageFetcher(
     StructType.fromDDL(schemaDdl),
     new JSONOptions(Map.empty[String, String], "UTC", ""),
     allowArrayAsStructs = true, Seq.empty)
-  private val client = HttpClient.newBuilder()
-    .connectTimeout(Duration.ofSeconds(30)).build()
-
   /** GET with retry, returning the raw body. `queryTail` is the
     * pre-encoded pagination fragment ("offset=0&limit=10" /
     * "cursor=abc&limit=10"); the configured extraQuery fragments
@@ -499,7 +493,7 @@ private[sources] class HttpPageFetcher(
         try {
           inflightGate.foreach(_.acquire())
           val resp =
-            try client.send(req, HttpResponse.BodyHandlers.ofString())
+            try HttpJson.client.send(req, HttpResponse.BodyHandlers.ofString())
             finally inflightGate.foreach(_.release())
           val code = resp.statusCode()
           if (code / 100 == 2) Right(resp.body())
@@ -844,8 +838,6 @@ private[sources] class HttpBatchWriter(
   private val gen = new org.apache.spark.sql.catalyst.json.JacksonGenerator(
     StructType.fromDDL(schemaDdl), sw,
     new JSONOptions(Map.empty[String, String], "UTC", ""))
-  private val client = HttpClient.newBuilder()
-    .connectTimeout(Duration.ofSeconds(30)).build()
   private val buf = new scala.collection.mutable.ArrayBuffer[String](postBatchSize)
   private var rowsWritten = 0L
   private var batchOrdinal = 0L
@@ -885,7 +877,7 @@ private[sources] class HttpBatchWriter(
     while (!done) {
       val outcome =
         try {
-          val resp = client.send(req, HttpResponse.BodyHandlers.ofString())
+          val resp = HttpJson.client.send(req, HttpResponse.BodyHandlers.ofString())
           val code = resp.statusCode()
           if (code / 100 == 2) Right(())
           else if (code == 429 || code / 100 == 5) Left(s"HTTP $code")

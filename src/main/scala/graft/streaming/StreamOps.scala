@@ -648,8 +648,8 @@ object StreamOps {
     * three disjoint slot cases, every join carrying the batch as a
     * side — so per-batch cost is batch-proportional, never a
     * re-enumeration. Cumulative per-node counts merge by full outer
-    * coalesce; both accumulators live as stats-reset checkpoints
-    * ([[graft.operators.Checkpoints.snap]]) with superseded blocks
+    * coalesce; both accumulators live as snapshots
+    * ([[graft.operators.Iterate.snap]]) with superseded blocks
     * freed per batch, so resident state is one generation of
     * (edges + counts) and the accumulated plan never regrows lineage.
     *
@@ -668,11 +668,11 @@ object StreamOps {
                         onBatch: (DataFrame, Long) => Unit,
                         stateDir: Option[String] = None)
       : org.apache.spark.sql.streaming.StreamingQuery = {
-    import graft.operators.{Checkpoints, Triangles}
+    import graft.operators.{Iterate, Triangles}
     val spark = edges.sparkSession
     // accumulated state: (wrapped frame, checkpoint handle) pairs
-    var acc: (DataFrame, DataFrame) = null     // oriented edge set
-    var counts: (DataFrame, DataFrame) = null  // cumulative per-node
+    var acc: DataFrame = null    // oriented edge set
+    var counts: DataFrame = null // cumulative per-node
     var restored = false
     edges.writeStream
       .option("checkpointLocation", checkpoint)
@@ -683,8 +683,8 @@ object StreamOps {
           stateDir.foreach { sd =>
             val sess = batch.sparkSession
             StreamState.latest(sess, sd, batchId).foreach { v =>
-              acc = Checkpoints.snap(StreamState.frame(sess, sd, v, "edges"))
-              counts = Checkpoints.snap(StreamState.frame(sess, sd, v, "counts"))
+              acc = Iterate.snap(StreamState.frame(sess, sd, v, "edges"))
+              counts = Iterate.snap(StreamState.frame(sess, sd, v, "counts"))
             }
           }
         }
@@ -698,35 +698,35 @@ object StreamOps {
           .dropDuplicates("a", "b")
         val fresh0 =
           if (acc == null) canon
-          else canon.join(acc._1, Seq("a", "b"), "left_anti")
-        val (fresh, freshChk) = Checkpoints.snap(fresh0)
+          else canon.join(acc, Seq("a", "b"), "left_anti")
+        val fresh = Iterate.snap(fresh0)
         val delta = Triangles
           .newTriangleRows(
-            if (acc == null) fresh.limit(0) else acc._1, fresh)
+            if (acc == null) fresh.limit(0) else acc, fresh)
           .select(explode(array(col("u"), col("v"), col("w"))).as("node"))
           .groupBy(col("node")).agg(count(lit(1)).as("d"))
         val merged =
           if (counts == null)
             delta.select(col("node"), col("d").as("n_triangles"))
-          else counts._1.join(delta, Seq("node"), "full_outer")
+          else counts.join(delta, Seq("node"), "full_outer")
             .select(col("node"),
               (coalesce(col("n_triangles"), lit(0L))
                 + coalesce(col("d"), lit(0L))).as("n_triangles"))
-        val newCounts = Checkpoints.snap(merged)
-        val newAcc = Checkpoints.snap(
-          if (acc == null) fresh else acc._1.unionAll(fresh))
-        if (counts != null) Checkpoints.free(counts._2)
-        if (acc != null) Checkpoints.free(acc._2)
-        Checkpoints.free(freshChk)
+        val newCounts = Iterate.snap(merged)
+        val newAcc = Iterate.snap(
+          if (acc == null) fresh else acc.unionAll(fresh))
+        if (counts != null) Iterate.free(counts)
+        if (acc != null) Iterate.free(acc)
+        Iterate.free(fresh)
         counts = newCounts
         acc = newAcc
         // durable commit before the user sees the batch (the scd2Sink
         // crash-window analysis)
         stateDir.foreach { sd =>
           StreamState.write(batch.sparkSession, sd, batchId,
-            Seq("edges" -> acc._1, "counts" -> counts._1))
+            Seq("edges" -> acc, "counts" -> counts))
         }
-        onBatch(counts._1, batchId)
+        onBatch(counts, batchId)
       }
       .start()
   }
@@ -786,10 +786,10 @@ object StreamOps {
                          onBatch: (Long, Long, Long, Double) => Unit,
                          stateDir: Option[String] = None)
       : org.apache.spark.sql.streaming.StreamingQuery = {
-    import graft.operators.{Checkpoints, Triangles}
+    import graft.operators.{Iterate, Triangles}
     require(m >= 3, s"reservoir must hold >= 3 edges, got $m")
-    var reservoir: (DataFrame, DataFrame) = null // ≤ m canonical edges
-    var t = 0L                                   // distinct edges seen
+    var reservoir: DataFrame = null // ≤ m canonical edges
+    var t = 0L                      // distinct edges seen
     var restored = false
     edges.writeStream
       .option("checkpointLocation", checkpoint)
@@ -800,7 +800,7 @@ object StreamOps {
           stateDir.foreach { sd =>
             val sess = batch.sparkSession
             StreamState.latest(sess, sd, batchId).foreach { v =>
-              reservoir = Checkpoints.snap(
+              reservoir = Iterate.snap(
                 StreamState.frame(sess, sd, v, "reservoir"))
               t = StreamState.meta(sess, sd, v)("t")
             }
@@ -824,20 +824,20 @@ object StreamOps {
         // assumed exact.
         t +=
           (if (reservoir == null) canon
-           else canon.join(reservoir._1.select(col("a"), col("b")),
+           else canon.join(reservoir.select(col("a"), col("b")),
              Seq("a", "b"), "left_anti")).count()
         // the same dedup guards the reservoir itself: two copies of a
         // re-delivered resident edge would both survive the limit,
         // double-counting its triangles in the sample
         val merged =
           if (reservoir == null) canon
-          else reservoir._1.unionByName(canon).dropDuplicates("a", "b")
-        val next = Checkpoints.snap(
+          else reservoir.unionByName(canon).dropDuplicates("a", "b")
+        val next = Iterate.snap(
           merged.orderBy(col("pri"), col("a"), col("b")).limit(m))
-        if (reservoir != null) Checkpoints.free(reservoir._2)
+        if (reservoir != null) Iterate.free(reservoir)
         reservoir = next
         val sampleTri = Triangles
-          .triangleRows(reservoir._1.select(col("a"), col("b"))).count()
+          .triangleRows(reservoir.select(col("a"), col("b"))).count()
         val scale = math.max(1.0,
           (t.toDouble * (t - 1) * (t - 2)) /
             (m.toDouble * (m - 1) * (m - 2)))
@@ -846,7 +846,7 @@ object StreamOps {
         // a re-delivered crash batch recompute idempotently)
         stateDir.foreach { sd =>
           StreamState.write(batch.sparkSession, sd, batchId,
-            Seq("reservoir" -> reservoir._1), Seq("t" -> t))
+            Seq("reservoir" -> reservoir), Seq("t" -> t))
         }
         onBatch(batchId, t, sampleTri, sampleTri * scale)
       }
@@ -874,9 +874,9 @@ object StreamOps {
     * Distances are integers and strictly decrease, so the loop
     * terminates; each step is one frontier ⋈ adjacency equi join + one
     * node-keyed min + one full-outer min-merge, with per-step state
-    * stats-reset-checkpointed and superseded blocks freed (the
-    * KCore/PageRank discipline — the merge reads the state twice, so
-    * lazy chaining across steps is unavailable).
+    * snapped ([[graft.operators.Iterate.snap]]) and superseded blocks
+    * freed (the KCore/PageRank discipline — the merge reads the state
+    * twice, so lazy chaining across steps is unavailable).
     *
     * NOT watermarked, deliberately (the [[triangleCountSink]]
     * argument): an edge never expires from shortest-path relevance,
@@ -900,9 +900,9 @@ object StreamOps {
                        onBatch: (DataFrame, Long) => Unit,
                        stateDir: Option[String] = None)
       : org.apache.spark.sql.streaming.StreamingQuery = {
-    import graft.operators.Checkpoints
-    var adj: (DataFrame, DataFrame) = null  // canonical (a, b, w), min weight
-    var dist: (DataFrame, DataFrame) = null // converged (v, d); seeds at 0
+    import graft.operators.Iterate
+    var adj: DataFrame = null  // canonical (a, b, w), min weight
+    var dist: DataFrame = null // converged (v, d); seeds at 0
     var restored = false
     val seed = seeds.toDF("v").distinct()
       .select(col("v"), lit(0L).as("d"))
@@ -922,8 +922,8 @@ object StreamOps {
           stateDir.foreach { sd =>
             val sess = batch.sparkSession
             StreamState.latest(sess, sd, batchId).foreach { v =>
-              adj = Checkpoints.snap(StreamState.frame(sess, sd, v, "adj"))
-              dist = Checkpoints.snap(StreamState.frame(sess, sd, v, "dist"))
+              adj = Iterate.snap(StreamState.frame(sess, sd, v, "adj"))
+              dist = Iterate.snap(StreamState.frame(sess, sd, v, "dist"))
             }
           }
         }
@@ -949,10 +949,10 @@ object StreamOps {
         val delta0 =
           if (adj == null) canon
           else canon
-            .join(adj._1.withColumnRenamed("w", "pw"), Seq("a", "b"), "left")
+            .join(adj.withColumnRenamed("w", "pw"), Seq("a", "b"), "left")
             .filter(col("pw").isNull || col("w") < col("pw"))
             .select(col("a"), col("b"), col("w"))
-        val (delta, deltaChk) = Checkpoints.snap(delta0)
+        val delta = Iterate.snap(delta0)
         // empty-delta early-out: a quiet trigger must not rewrite the
         // O(|E|) accumulated adjacency for zero information — keep the
         // existing generation (the frontier below is empty for the same
@@ -960,66 +960,65 @@ object StreamOps {
         val deltaEmpty = delta.limit(1).count() == 0
         val newAdj =
           if (deltaEmpty && adj != null) adj
-          else Checkpoints.snap(
+          else Iterate.snap(
             if (adj == null) delta
-            else adj._1.withColumnRenamed("w", "pw")
+            else adj.withColumnRenamed("w", "pw")
               .join(delta.withColumnRenamed("w", "nw"), Seq("a", "b"), "full_outer")
               .select(col("a"), col("b"),
                 least(coalesce(col("pw"), col("nw")),
                   coalesce(col("nw"), col("pw"))).as("w")))
-        val sym = newAdj._1.select(col("a").as("v"), col("b").as("n"), col("w"))
-          .union(newAdj._1.select(col("b").as("v"), col("a").as("n"), col("w")))
-        var cur: (DataFrame, DataFrame) =
-          if (dist == null) Checkpoints.snap(seed) else dist
+        val sym = newAdj.select(col("a").as("v"), col("b").as("n"), col("w"))
+          .union(newAdj.select(col("b").as("v"), col("a").as("n"), col("w")))
+        var cur: DataFrame = if (dist == null) Iterate.snap(seed) else dist
         // frontier: on the first batch every seed must propagate; after
         // that, only finite-distance endpoints of the delta can start
         // an improvement wave
         val deltaEnds = delta.select(col("a").as("v"))
           .union(delta.select(col("b").as("v"))).distinct()
-        var frontier: (DataFrame, DataFrame) = Checkpoints.snap(
-          if (dist == null) cur._1 else cur._1.join(deltaEnds, Seq("v")))
+        var frontier: DataFrame = Iterate.snap(
+          if (dist == null) cur else cur.join(deltaEnds, Seq("v")))
         var steps = 0
-        var live = frontier._1.limit(1).count() > 0
+        var live = frontier.limit(1).count() > 0
         while (live) {
           steps += 1
           // distances strictly decrease on non-negative integers, so
           // quiescence is guaranteed; a runaway here is a bug, not a
           // slow graph — fail loudly instead of spinning
           require(steps <= 100000, s"relaxation did not quiesce in $steps steps")
-          val props = frontier._1.join(sym, Seq("v"))
+          val props = frontier.join(sym, Seq("v"))
             .select(col("n").as("v"), (col("d") + col("w")).as("cand"))
             .groupBy(col("v")).agg(min(col("cand")).as("cand"))
           val improved0 = props
-            .join(cur._1, Seq("v"), "left")
+            .join(cur, Seq("v"), "left")
             .filter(col("d").isNull || col("cand") < col("d"))
             .select(col("v"), col("cand").as("d"))
-          val newFrontier = Checkpoints.snap(improved0)
-          live = newFrontier._1.limit(1).count() > 0
+          val newFrontier = Iterate.snap(improved0)
+          live = newFrontier.limit(1).count() > 0
           if (live) {
-            val merged = Checkpoints.snap(
-              cur._1.withColumnRenamed("d", "pd")
-                .join(newFrontier._1.withColumnRenamed("d", "nd"),
+            val merged = Iterate.snap(
+              cur.withColumnRenamed("d", "pd")
+                .join(newFrontier.withColumnRenamed("d", "nd"),
                   Seq("v"), "full_outer")
                 .select(col("v"),
                   least(coalesce(col("pd"), col("nd")),
                     coalesce(col("nd"), col("pd"))).as("d")))
-            if (cur ne dist) Checkpoints.free(cur._2)
+            if (cur ne dist) Iterate.free(cur)
             cur = merged
           }
-          Checkpoints.free(frontier._2)
+          Iterate.free(frontier)
           frontier = newFrontier
         }
-        Checkpoints.free(frontier._2)
-        Checkpoints.free(deltaChk)
-        if (adj != null && (newAdj ne adj)) Checkpoints.free(adj._2)
+        Iterate.free(frontier)
+        Iterate.free(delta)
+        if (adj != null && (newAdj ne adj)) Iterate.free(adj)
         adj = newAdj
-        if ((dist != null) && (cur ne dist)) Checkpoints.free(dist._2)
+        if ((dist != null) && (cur ne dist)) Iterate.free(dist)
         dist = cur
         stateDir.foreach { sd =>
           StreamState.write(batch.sparkSession, sd, batchId,
-            Seq("adj" -> adj._1, "dist" -> dist._1))
+            Seq("adj" -> adj, "dist" -> dist))
         }
-        onBatch(dist._1, batchId)
+        onBatch(dist, batchId)
       }
     // the accumulated adjacency/distance blocks and the cached seed
     // frame must die with the query, not the session (the annTopKSink
@@ -1043,8 +1042,8 @@ object StreamOps {
         override def onQueryTerminated(e: QueryTerminatedEvent): Unit =
           if (e.id == q.id) {
             seed.unpersist(false)
-            if (adj != null) Checkpoints.free(adj._2)
-            if (dist != null) Checkpoints.free(dist._2)
+            if (adj != null) Iterate.free(adj)
+            if (dist != null) Iterate.free(dist)
             spark.streams.removeListener(this)
           }
       })
@@ -1057,10 +1056,11 @@ object StreamOps {
     * doc) and (new doc, new doc) at levenshtein ≤ k is reported, with
     * per-batch JOIN/PROBE cost proportional to the BATCH, never the
     * corpus (the state REWRITE is not: each batch re-materializes the
-    * accumulated docs/segments/pairs through [[Checkpoints.snap]], an
-    * O(corpus-seen) localCheckpoint write per batch — the price of the
-    * stats-reset discipline; an incremental append-only state store
-    * would shed it at the cost of a durable sink dependency). The
+    * accumulated docs/segments/pairs through
+    * [[graft.operators.Iterate.snap]], an O(corpus-seen) checkpoint
+    * write per batch — the price of the snapshot discipline; an
+    * incremental append-only state store would shed it at the cost of
+    * a durable sink dependency). The
     * exploitable structure (the [[triangleCountSink]] /
     * [[shortestPathSink]] design question — what does each arrival
     * actually touch?) is that the segment index is APPEND-ONLY under
@@ -1099,10 +1099,10 @@ object StreamOps {
                         onBatch: (DataFrame, Long) => Unit,
                         stateDir: Option[String] = None)
       : org.apache.spark.sql.streaming.StreamingQuery = {
-    import graft.operators.{Checkpoints, EditDistJoin}
-    var accDocs: (DataFrame, DataFrame) = null  // (id, t) seen so far
-    var accSegs: (DataFrame, DataFrame) = null  // their segment index
-    var accPairs: (DataFrame, DataFrame) = null // cumulative result
+    import graft.operators.{EditDistJoin, Iterate}
+    var accDocs: DataFrame = null  // (id, t) seen so far
+    var accSegs: DataFrame = null  // their segment index
+    var accPairs: DataFrame = null // cumulative result
     var restored = false
     docs.writeStream
       .option("checkpointLocation", checkpoint)
@@ -1116,23 +1116,23 @@ object StreamOps {
           stateDir.foreach { sd =>
             val sess = batch.sparkSession
             StreamState.latest(sess, sd, batchId).foreach { v =>
-              accDocs = Checkpoints.snap(StreamState.frame(sess, sd, v, "docs"))
-              accSegs = Checkpoints.snap(StreamState.frame(sess, sd, v, "segs"))
-              accPairs = Checkpoints.snap(StreamState.frame(sess, sd, v, "pairs"))
+              accDocs = Iterate.snap(StreamState.frame(sess, sd, v, "docs"))
+              accSegs = Iterate.snap(StreamState.frame(sess, sd, v, "segs"))
+              accPairs = Iterate.snap(StreamState.frame(sess, sd, v, "pairs"))
             }
           }
         }
         val canon = batch.select(col("id"), col("t")).dropDuplicates("id")
         val fresh0 =
           if (accDocs == null) canon
-          else canon.join(accDocs._1.select(col("id")), Seq("id"), "left_anti")
-        val (fresh, freshChk) = Checkpoints.snap(fresh0)
+          else canon.join(accDocs.select(col("id")), Seq("id"), "left_anti")
+        val fresh = Iterate.snap(fresh0)
         // old×new (index side = accumulated segments) + new×new
         val within = EditDistJoin.pairs(fresh, k)
         val delta =
           if (accDocs == null) within
           else within.unionByName(
-            EditDistJoin.pairsAgainstIndex(accSegs._1, accDocs._1, fresh, k)
+            EditDistJoin.pairsAgainstIndex(accSegs, accDocs, fresh, k)
               // canonicalize to d1 < d2 by id — the index side may hold
               // the numerically larger id; lens travel with their ids
               .select(
@@ -1143,26 +1143,26 @@ object StreamOps {
                 when(col("d1") < col("d2"), col("len2"))
                   .otherwise(col("len1")).as("len2"),
                 col("dist")))
-        val newPairs = Checkpoints.snap(
-          if (accPairs == null) delta else accPairs._1.unionByName(delta))
-        val newDocs = Checkpoints.snap(
-          if (accDocs == null) fresh else accDocs._1.unionAll(fresh))
-        val newSegs = Checkpoints.snap(
+        val newPairs = Iterate.snap(
+          if (accPairs == null) delta else accPairs.unionByName(delta))
+        val newDocs = Iterate.snap(
+          if (accDocs == null) fresh else accDocs.unionAll(fresh))
+        val newSegs = Iterate.snap(
           if (accSegs == null) EditDistJoin.segmentIndex(fresh, k)
-          else accSegs._1.unionAll(EditDistJoin.segmentIndex(fresh, k)))
-        if (accPairs != null) Checkpoints.free(accPairs._2)
-        if (accDocs != null) Checkpoints.free(accDocs._2)
-        if (accSegs != null) Checkpoints.free(accSegs._2)
-        Checkpoints.free(freshChk)
+          else accSegs.unionAll(EditDistJoin.segmentIndex(fresh, k)))
+        if (accPairs != null) Iterate.free(accPairs)
+        if (accDocs != null) Iterate.free(accDocs)
+        if (accSegs != null) Iterate.free(accSegs)
+        Iterate.free(fresh)
         accPairs = newPairs
         accDocs = newDocs
         accSegs = newSegs
         stateDir.foreach { sd =>
           StreamState.write(batch.sparkSession, sd, batchId,
-            Seq("docs" -> accDocs._1, "segs" -> accSegs._1,
-              "pairs" -> accPairs._1))
+            Seq("docs" -> accDocs, "segs" -> accSegs,
+              "pairs" -> accPairs))
         }
-        onBatch(accPairs._1, batchId)
+        onBatch(accPairs, batchId)
       }
       .start()
   }
@@ -1183,8 +1183,8 @@ object StreamOps {
     * while every other entity's dimension rows pass through an
     * entity-keyed anti-join — per-batch REBUILD cost is bounded by the
     * affected entities' history mass, not the corpus. The accumulated
-    * events and the snapshot are stats-reset checkpoints
-    * ([[graft.operators.Checkpoints.snap]]) with superseded generations
+    * events and the dimension are snapped
+    * ([[graft.operators.Iterate.snap]]) with superseded generations
     * freed per batch; the state REWRITE is O(seen) per batch (the
     * [[editDistDedupSink]] pricing note). NOT watermarked, deliberately:
     * arbitrarily late events must still split ranges — a watermark
@@ -1209,9 +1209,9 @@ object StreamOps {
                onBatch: (DataFrame, Long) => Unit,
                stateDir: Option[String] = None)
       : org.apache.spark.sql.streaming.StreamingQuery = {
-    import graft.operators.{Checkpoints, Merge}
-    var accEv: (DataFrame, DataFrame) = null // every event seen so far
-    var dim: (DataFrame, DataFrame) = null   // current SCD2 snapshot
+    import graft.operators.{Iterate, Merge}
+    var accEv: DataFrame = null // every event seen so far
+    var dim: DataFrame = null   // current SCD2 snapshot
     var restored = false
     events.writeStream
       .option("checkpointLocation", checkpoint)
@@ -1222,10 +1222,8 @@ object StreamOps {
           stateDir.foreach { sd =>
             val sess = batch.sparkSession
             StreamState.latest(sess, sd, batchId).foreach { v =>
-              accEv = graft.operators.Checkpoints.snap(
-                StreamState.frame(sess, sd, v, "events"))
-              dim = graft.operators.Checkpoints.snap(
-                StreamState.frame(sess, sd, v, "dim"))
+              accEv = Iterate.snap(StreamState.frame(sess, sd, v, "events"))
+              dim = Iterate.snap(StreamState.frame(sess, sd, v, "dim"))
             }
           }
         }
@@ -1234,17 +1232,17 @@ object StreamOps {
           .dropDuplicates("event_id")
         val fresh0 =
           if (accEv == null) canon
-          else canon.join(accEv._1.select(col("event_id")),
+          else canon.join(accEv.select(col("event_id")),
             Seq("event_id"), "left_anti")
-        val (fresh, freshChk) = Checkpoints.snap(fresh0)
-        val newEv = Checkpoints.snap(
-          if (accEv == null) fresh else accEv._1.unionByName(fresh))
-        val newDim = Checkpoints.snap(
-          if (dim == null) Merge.scd2Dim(newEv._1)
-          else Merge.scd2ApplyLate(dim._1, newEv._1, fresh))
-        if (accEv != null) Checkpoints.free(accEv._2)
-        if (dim != null) Checkpoints.free(dim._2)
-        Checkpoints.free(freshChk)
+        val fresh = Iterate.snap(fresh0)
+        val newEv = Iterate.snap(
+          if (accEv == null) fresh else accEv.unionByName(fresh))
+        val newDim = Iterate.snap(
+          if (dim == null) Merge.scd2Dim(newEv)
+          else Merge.scd2ApplyLate(dim, newEv, fresh))
+        if (accEv != null) Iterate.free(accEv)
+        if (dim != null) Iterate.free(dim)
+        Iterate.free(fresh)
         accEv = newEv
         dim = newDim
         // durable commit BEFORE the user sees the batch. Crash windows:
@@ -1255,9 +1253,9 @@ object StreamOps {
         // rule) and the overwrite makes the rewrite idempotent.
         stateDir.foreach { sd =>
           StreamState.write(batch.sparkSession, sd, batchId,
-            Seq("events" -> accEv._1, "dim" -> dim._1))
+            Seq("events" -> accEv, "dim" -> dim))
         }
-        onBatch(dim._1, batchId)
+        onBatch(dim, batchId)
       }
       .start()
   }

@@ -96,6 +96,13 @@ class BpeSpec extends AnyFunSuite {
       "no word compressed below its character count — vacuous merges")
   }
 
+  test("encodeWords returns a null count for a null word instead of throwing") {
+    val got = BpeTrain.encodeWords(Seq("aab", null).toDF("w"), Seq(("a", "a")))
+      .collect().map(r => Option(r.getString(0)) -> r.get(1)).toMap
+    assert(got(Some("aab")) === 2L)
+    assert(got(None) === null)
+  }
+
   test("an exhausted corpus fails loudly instead of under-delivering merges") {
     // single-char words have no adjacent pairs at all
     val e = intercept[IllegalArgumentException] {

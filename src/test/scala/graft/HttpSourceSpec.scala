@@ -634,6 +634,28 @@ class HttpSourceSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(rows.length === 6, s"all rows must land despite first-attempt 503s: $rows")
   }
 
+  test("repeated reads and writes share one HttpClient: selector threads stay flat") {
+    import spark.implicits._
+    // every HttpClient owns one "HttpClient-<n>-SelectorManager" thread
+    // that lives until the client is garbage-collected
+    def selectorThreads(): Int = Thread.getAllStackTraces.keySet.asScala
+      .count(t => t.isAlive && t.getName.matches("HttpClient-\\d+-SelectorManager"))
+    def pass(): Unit = {
+      assert(read(pageSize = 50, numPartitions = 4).count() === TotalRows)
+      (0L until 8L).map(i => (i, s"t-$i")).toDF("id", "name").repartition(4)
+        .write.format("graft-http")
+        .option("url", s"http://127.0.0.1:$port/ingest")
+        .option("schema", "id LONG, name STRING")
+        .option("postBatchSize", "4")
+        .mode("append").save()
+    }
+    pass()
+    val afterFirst = selectorThreads()
+    (1 to 5).foreach(_ => pass())
+    assert(selectorThreads() <= afterFirst,
+      s"selector threads grew from $afterFirst to ${selectorThreads()} over 5 passes")
+  }
+
   test("filters and projections compose on top of the source") {
     val df = read(pageSize = 64, numPartitions = 2)
       .filter(col("id") % 2 === 0)

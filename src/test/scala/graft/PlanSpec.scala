@@ -1378,13 +1378,22 @@ class PlanSpec extends AnyFunSuite {
     // (16 total in plans/r19's before dump) must never come back.
     // Regression direction: any ENSURE_REQUIREMENTS exchange keyed on
     // the estimate value nc means a step re-shuffled its pre-count.
+    import org.apache.spark.sql.catalyst.expressions.{AttributeReference, Expression}
+    def refersToNc(e: Expression): Boolean = e.exists {
+      case a: AttributeReference => a.name == "nc"
+      case _ => false
+    }
     val nodes = executedPlans("graph_kcore").flatMap(p => flattenPlan(p._2))
+    // non-vacuous: the estimate column the gate keys on is still named nc
+    assert(nodes.exists(_.output.exists(refersToNc)),
+      "no attribute named nc in the graph_kcore plans — the gate's key went stale")
     val stepExchanges = nodes.collect {
       case e: ShuffleExchangeExec
-        if e.outputPartitioning.isInstanceOf[HashPartitioning] &&
-          e.shuffleOrigin.toString == "ENSURE_REQUIREMENTS" &&
-          e.outputPartitioning.asInstanceOf[HashPartitioning]
-            .expressions.exists(_.toString.contains("nc#")) => e
+        if e.shuffleOrigin.toString == "ENSURE_REQUIREMENTS" &&
+          (e.outputPartitioning match {
+            case h: HashPartitioning => h.expressions.exists(refersToNc)
+            case _ => false
+          }) => e
     }
     assert(stepExchanges.isEmpty,
       s"h-index steps re-shuffle their pre-count again:\n${stepExchanges.mkString("\n")}")
