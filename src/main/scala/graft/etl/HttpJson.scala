@@ -35,9 +35,13 @@ object HttpJson {
     * until the client is garbage-collected, so a client per call,
     * partition, reader or write task leaked threads; HttpClient is
     * thread-safe and pools connections per host.
+    *
+    * No client-wide connect timeout: on JDK 17 a connection keeps its
+    * connect timer, and through it the exchange that opened it with
+    * that exchange's whole response body, for as long as it stays
+    * pooled. Every request sets its own timeout, which covers connect.
     */
-  private[graft] lazy val client: HttpClient =
-    HttpClient.newBuilder().connectTimeout(Duration.ofSeconds(30)).build()
+  private[graft] lazy val client: HttpClient = HttpClient.newBuilder().build()
 
   /** Decode a JSON-array payload against an explicit row `schema` —
     * shape-guarded like [[DroneSense.parseJson]] (a non-array or

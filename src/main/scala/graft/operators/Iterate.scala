@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, PlanFrames}
+import org.apache.spark.sql.{DataFrame, SnapShim}
 import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.catalyst.plans.logical.Statistics
 import org.apache.spark.sql.catalyst.plans.physical.{Partitioning, PartitioningCollection}
@@ -29,7 +29,9 @@ object Iterate {
     *     a key feeds the next round's key-grouped join or aggregate
     *     without a re-shuffle;
     *   - SIZE: its estimate is min(origin plan's estimate, bytes the
-    *     checkpoint stored), read from the block manager without a job.
+    *     checkpoint stored), read from the block manager master without
+    *     a job (or min(origin, `spark.sql.defaultSizeInBytes`) if some
+    *     partition has no block, never a partial sum).
     *     `localCheckpoint` copies the origin estimate, so a state a
     *     plan references twice squares its estimate every generation
     *     until the driver livelocks multiplying huge BigIntegers.
@@ -49,12 +51,12 @@ object Iterate {
       }) => p
       case _ => leaf.outputPartitioning
     }
-    // absent from storage info = no block with bytes = nothing stored
-    val stored = df.sparkSession.sparkContext.getRDDStorageInfo
-      .find(_.id == rdd.id).map(i => i.memSize + i.diskSize).getOrElse(0L)
-    val stats = Statistics(sizeInBytes = leaf.stats.sizeInBytes.min(BigInt(stored)))
     val session = df.sparkSession.asInstanceOf[classic.SparkSession]
-    PlanFrames.ofPlan(session, leaf.copy(outputPartitioning = partitioning)(
+    // a partition without a block leaves the stored bytes unknown: fall
+    // back to the size Spark assumes for a relation it cannot measure
+    val cap = SnapShim.storedBytes(rdd).getOrElse(session.sessionState.conf.defaultSizeInBytes)
+    val stats = Statistics(sizeInBytes = leaf.stats.sizeInBytes.min(BigInt(cap)))
+    SnapShim.ofPlan(session, leaf.copy(outputPartitioning = partitioning)(
       session, Some(stats), Some(leaf.constraints)))
   }
 

@@ -135,17 +135,13 @@ object KCore {
       .unionAll(edges.select(col("b").as("v"), col("a").as("n")))
       .persist(StorageLevel.MEMORY_AND_DISK)
     val maxRounds = (maxIterations + stepsPerRound - 1) / stepsPerRound
-    // decided once, on the snapped degree seed the first round reads
-    var bcastState: Option[Boolean] = None
-    // round 0: estimate = degree (the h-index seed). One round past the
-    // cap tells "converged on the last allowed round" (stops within
-    // maxRounds) from "still moving" (runs them all).
-    val (est, rounds) = Iterate.fixedPoint(
-      adj.groupBy(col("v")).agg(count(lit(1)).cast("int").as("c")),
-      maxRounds + 1) { st =>
-      val bcast = bcastState.getOrElse(st.count() <= stateBroadcastThreshold)
-      bcastState = Some(bcast)
-      (1 to stepsPerRound).foldLeft(st)((x, _) => hStep(adj, x, bcast))
+    // round 0: estimate = degree (the h-index seed), one row per node
+    val seed = adj.groupBy(col("v")).agg(count(lit(1)).cast("int").as("c"))
+    val bcastState = seed.count() <= stateBroadcastThreshold
+    // one round past the cap tells "converged on the last allowed round"
+    // (stops within maxRounds) from "still moving" (runs them all)
+    val (est, rounds) = Iterate.fixedPoint(seed, maxRounds + 1) { st =>
+      (1 to stepsPerRound).foldLeft(st)((x, _) => hStep(adj, x, bcastState))
     }
     require(rounds <= maxRounds,
       s"k-core h-index iteration still moving after $maxIterations steps " +
