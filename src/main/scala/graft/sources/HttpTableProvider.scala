@@ -1,15 +1,20 @@
 package graft.sources
 
+import java.io.{ByteArrayOutputStream, OutputStreamWriter, Writer}
 import java.net.URI
 import java.net.http.{HttpRequest, HttpResponse}
+import java.nio.ByteBuffer
+import java.nio.charset.StandardCharsets.UTF_8
 import java.time.Duration
 import java.util
+import java.util.concurrent.{Callable, ExecutionException, Executors, Future}
 
 import scala.jdk.CollectionConverters._
 
-import com.fasterxml.jackson.core.JsonFactory
+import com.fasterxml.jackson.core.{JsonFactory, JsonParser, JsonToken, StreamReadFeature, StreamWriteFeature}
+import org.apache.spark.sql.JacksonShim
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.json.{CreateJacksonParser, JSONOptions, JacksonParser}
+import org.apache.spark.sql.catalyst.json.{JSONOptions, JacksonGenerator, JacksonParser}
 import org.apache.spark.sql.connector.catalog.{SupportsRead, SupportsWrite, Table, TableCapability, TableProvider}
 import org.apache.spark.sql.connector.expressions.Transform
 import org.apache.spark.sql.connector.read._
@@ -56,7 +61,18 @@ import graft.etl.HttpJson
   * fewer than `pageSize` rows marks the end of the relation (the standard
   * offset-pagination contract), so every reader past it terminates.
   * Pages decode executor-side through Spark's JacksonParser — the same
-  * engine `from_json` uses, so type handling matches the batch path.
+  * engine `from_json` uses, so type handling matches the batch path —
+  * straight from the response bytes ([[HttpCodec]]). A record whose
+  * top-level `NOT NULL` column is missing or null fails the task, naming
+  * the column and the page offset: the optimizer trusts the declaration.
+  *
+  * Fetch-ahead: every reader keeps one GET in flight ahead of its task
+  * thread. The offset reader issues page k+stride's request after page k
+  * decodes as a full page and before its rows are handed out, so decode
+  * and downstream work overlap the wire while the requests sent stay
+  * exactly those of a serial walk; the streaming range reader does the
+  * same within its range. The request runs on a shared daemon pool, and
+  * `maxInflight` still counts it only while it is on the wire.
   *
   * Retries/idempotence: a task retry re-fetches only its own pages;
   * correctness needs the usual offset-API assumption that the relation is
@@ -66,7 +82,7 @@ import graft.etl.HttpJson
   * **Cursor-token APIs** (`option("pagination", "cursor")`) — the other
   * common REST shape (and the TAK-style ecosystem's usual one): each
   * response carries the opaque token for the next page, so there is no
-  * stride. The walk runs as ONE partition with request pipelining
+  * stride. The walk runs as ONE partition with the same fetch-ahead
   * ([[HttpCursorReader]]): the next GET is issued the moment the token
   * is known, overlapping network latency with row decode. Options:
   *
@@ -417,6 +433,35 @@ private[sources] class HttpRangeReaderFactory(
   }
 }
 
+/** The record codec of every `graft-http` path: Spark's JacksonParser
+  * and JacksonGenerator (the engines `from_json` and `to_json` use) over
+  * UTF-8 bytes, with Jackson's fast double parser and writer. Both
+  * round-trip every double bit for bit, like JDK 17's
+  * `Double.parseDouble` and `Double.toString`, which took about a third
+  * of a CoT task's CPU.
+  */
+private[graft] object HttpCodec {
+  val options = new JSONOptions(Map.empty[String, String], "UTC", "")
+
+  /** A UTF-8 parser over the slice `body`, for [[JacksonParser.parse]]. */
+  def openParser(factory: JsonFactory, body: ByteBuffer): JsonParser =
+    factory.createParser(body.array, body.arrayOffset + body.position, body.remaining)
+      .enable(StreamReadFeature.USE_FAST_DOUBLE_PARSER.mappedFeature())
+
+  def generator(schema: StructType, out: Writer): JacksonGenerator = {
+    val g = new JacksonGenerator(schema, out, options)
+    JacksonShim.jsonGenerator(g).enable(StreamWriteFeature.USE_FAST_DOUBLE_WRITER.mappedFeature())
+    g
+  }
+}
+
+/** One request running on [[HttpPageFetcher]]'s fetch-ahead pool. */
+private[sources] final class InFlight[T](f: Future[T]) {
+  /** The request's result; its failure is rethrown as it was thrown. */
+  def await(): T = try f.get() catch { case e: ExecutionException => throw e.getCause }
+  def cancel(): Unit = { f.cancel(true); () }
+}
+
 /** Shared per-reader fetch plumbing (the shared client + one
   * JacksonParser; one GET per page) for the batch and streaming readers — the retry/
   * auth/timeout policy lives in exactly one place.
@@ -453,6 +498,17 @@ private[sources] object HttpPageFetcher {
   def gate(authority: String, permits: Int): java.util.concurrent.Semaphore =
     gates.computeIfAbsent(s"$authority#$permits",
       _ => new java.util.concurrent.Semaphore(permits, true))
+
+  /** Daemon threads that carry the one request each reader or writer
+    * task keeps in flight: a reader's next page, a writer's last batch.
+    * Cached, so threads exist only while requests do (plus an idle
+    * minute).
+    */
+  private val pool = Executors.newCachedThreadPool { (r: Runnable) =>
+    val t = new Thread(r, "graft-http-ahead"); t.setDaemon(true); t
+  }
+  def ahead[T](request: => T): InFlight[T] =
+    new InFlight(pool.submit(new Callable[T] { def call(): T = request }))
 }
 
 private[sources] class HttpPageFetcher(
@@ -467,18 +523,21 @@ private[sources] class HttpPageFetcher(
     if (maxInflight > 0)
       Some(HttpPageFetcher.gate(URI.create(url).getAuthority, maxInflight))
     else None
-  private val parser = new JacksonParser(
-    StructType.fromDDL(schemaDdl),
-    new JSONOptions(Map.empty[String, String], "UTC", ""),
-    allowArrayAsStructs = true, Seq.empty)
+  private val schema = StructType.fromDDL(schemaDdl)
+  private val parser =
+    new JacksonParser(schema, HttpCodec.options, allowArrayAsStructs = true, Seq.empty)
+  // JacksonParser leaves a missing field null even in a NOT NULL column,
+  // and the optimizer trusts the declaration (an isNull filter on such a
+  // column folds to false), so the decode must enforce it
+  private val required = schema.fields.indices.filterNot(schema(_).nullable).toArray
+
   /** GET with retry, returning the raw body. `queryTail` is the
     * pre-encoded pagination fragment ("offset=0&limit=10" /
     * "cursor=abc&limit=10"); the configured extraQuery fragments
     * (fields/filter params) are appended. THREAD-SAFE (HttpClient is;
-    * nothing else is touched) — the cursor reader calls this from its
-    * fetch-ahead thread.
+    * nothing else is touched) — readers call it on the fetch-ahead pool.
     */
-  def fetchBody(queryTail: String): String = {
+  def fetchBody(queryTail: String): Array[Byte] = {
     val sep = if (url.contains("?")) "&" else "?"
     val extras = extraQuery.map("&" + _).mkString
     val pageUrl = s"$url$sep$queryTail$extras"
@@ -487,13 +546,13 @@ private[sources] class HttpPageFetcher(
     headers.foreach { case (k, v) => b.header(k, v) }
     val req = b.build()
     var attempt = 0
-    var body: String = null
+    var body: Array[Byte] = null
     while (body == null) {
       val outcome =
         try {
           inflightGate.foreach(_.acquire())
           val resp =
-            try HttpJson.client.send(req, HttpResponse.BodyHandlers.ofString())
+            try HttpJson.client.send(req, HttpResponse.BodyHandlers.ofByteArray())
             finally inflightGate.foreach(_.release())
           val code = resp.statusCode()
           if (code / 100 == 2) Right(resp.body())
@@ -526,7 +585,7 @@ private[sources] class HttpPageFetcher(
   /** `Retry-After` in millis, from either RFC 9110 form (delta-seconds
     * or an HTTP-date); None when absent or unparseable.
     */
-  private def retryAfterMs(resp: HttpResponse[String]): Option[Long] = {
+  private def retryAfterMs(resp: HttpResponse[_]): Option[Long] = {
     val v = resp.headers().firstValue("Retry-After")
     if (!v.isPresent) None
     else {
@@ -543,22 +602,35 @@ private[sources] class HttpPageFetcher(
     }
   }
 
-  /** Parse a JSON array (or single object) of records. NOT thread-safe —
-    * call from the task thread only.
+  /** Parse a JSON array (or single object) of records, the page starting
+    * at row `pageStart`. NOT thread-safe — call from the task thread only.
     */
-  def parse(json: String): Seq[InternalRow] =
-    parser.parse[String](json,
-      CreateJacksonParser.string(_: JsonFactory, _: String),
-      UTF8String.fromString).toSeq
+  def parse(body: ByteBuffer, pageStart: Long): Seq[InternalRow] = {
+    val rows = parser.parse[ByteBuffer](body, HttpCodec.openParser,
+      b => UTF8String.fromBytes(b.array, b.arrayOffset + b.position, b.remaining)).toSeq
+    rows.foreach { row =>
+      required.foreach { i =>
+        if (row.isNullAt(i)) throw new IllegalStateException(
+          s"graft-http: required column '${schema(i).name}' is null or missing " +
+            s"in the page at offset $pageStart")
+      }
+    }
+    rows
+  }
 
-  /** GET one page: rows [offset, offset+limit) as parsed InternalRows. */
-  def fetch(offset: Long, limit: Long): Seq[InternalRow] =
-    parse(fetchBody(s"$offsetParam=$offset&$limitParam=$limit"))
+  /** Start the GET of rows [offset, offset+limit) on the fetch-ahead pool. */
+  def fetchAhead(offset: Long, limit: Long): InFlight[Array[Byte]] =
+    HttpPageFetcher.ahead(fetchBody(s"$offsetParam=$offset&$limitParam=$limit"))
+
+  /** Wait for a page started by [[fetchAhead]] and decode it. */
+  def rows(page: InFlight[Array[Byte]], offset: Long): Seq[InternalRow] =
+    parse(ByteBuffer.wrap(page.await()), offset)
 }
 
 /** Pages through an exact [startRow, endRow) range with limit-capped
   * requests — exactly-once per planned range (the range came from
-  * checkpointed offsets).
+  * checkpointed offsets). The next page's GET leaves before the current
+  * page's rows are handed out.
   */
 private[sources] class HttpRangeReader(
     url: String, schemaDdl: String, pageSize: Int,
@@ -570,23 +642,30 @@ private[sources] class HttpRangeReader(
   private val fetcher =
     new HttpPageFetcher(url, schemaDdl, offsetParam, limitParam, headers,
       extraQuery, maxInflight = maxInflight)
-  private var cursor = startRow
+  private var cursor = startRow // first row not yet decoded; `ahead` fetches from it
+  private var ahead: Option[InFlight[Array[Byte]]] = fetchNext()
   private var rows: Iterator[InternalRow] = Iterator.empty
 
+  private def fetchNext(): Option[InFlight[Array[Byte]]] =
+    if (cursor < endRow)
+      Some(fetcher.fetchAhead(cursor, math.min(pageSize.toLong, endRow - cursor)))
+    else None
+
   override def next(): Boolean = {
-    while (!rows.hasNext && cursor < endRow) {
-      val fetched = fetcher.fetch(cursor, math.min(pageSize.toLong, endRow - cursor))
+    while (!rows.hasNext && ahead.isDefined) {
+      val fetched = fetcher.rows(ahead.get, cursor)
       // the range came from committed offsets, so the rows MUST exist
       require(fetched.nonEmpty,
         s"graft-http: server returned no rows for committed range at offset $cursor")
       cursor += fetched.size
+      ahead = fetchNext()
       rows = fetched.iterator
     }
     rows.hasNext
   }
 
   override def get(): InternalRow = rows.next()
-  override def close(): Unit = ()
+  override def close(): Unit = ahead.foreach(_.cancel())
 }
 
 /** Strided page range: this partition owns pages idx, idx+stride, … */
@@ -617,48 +696,49 @@ private[sources] class HttpPartitionReader(
   private val fetcher =
     new HttpPageFetcher(url, schemaDdl, offsetParam, limitParam, headers,
       extraQuery, maxInflight = maxInflight)
-  private var page = firstPage
+  private var page = firstPage // the page `ahead` fetches
   private var emitted = 0L
-  private var exhausted = false
-  private var staggered = staggerMs <= 0
+  // deterministic fan-out de-lockstep: partition i's FIRST request
+  // waits i × staggerMs (capped), so N partitions arrive spread over
+  // a window instead of as one synchronized burst a throttling
+  // server 429s wholesale. One sleep per partition lifetime.
+  if (staggerMs > 0)
+    Thread.sleep(math.min(firstPage.toLong * staggerMs, HttpPageFetcher.MaxStaggerMs))
+  private var ahead: Option[InFlight[Array[Byte]]] = fetchNext()
   private var rows: Iterator[InternalRow] = Iterator.empty
 
+  /** The GET of `page`. Pushed limit: this partition never needs more
+    * than `limit` rows (Spark applies the global limit above), so cap the
+    * page request and stop once reached. Page OFFSETS stay
+    * pageSize-strided — a capped request just leaves the rest of that
+    * page unread.
+    */
+  private def fetchNext(): Option[InFlight[Array[Byte]]] = {
+    val want =
+      if (limit >= 0) math.min(pageSize.toLong, limit - emitted) else pageSize.toLong
+    if (want > 0) Some(fetcher.fetchAhead(page.toLong * pageSize, want)) else None
+  }
+
   override def next(): Boolean = {
-    if (!staggered) {
-      // deterministic fan-out de-lockstep: partition i's FIRST request
-      // waits i × staggerMs (capped), so N partitions arrive spread over
-      // a window instead of as one synchronized burst a throttling
-      // server 429s wholesale. One sleep per partition lifetime.
-      Thread.sleep(math.min(firstPage.toLong * staggerMs,
-        HttpPageFetcher.MaxStaggerMs))
-      staggered = true
-    }
-    while (!rows.hasNext && !exhausted) {
-      // Pushed limit: this partition never needs more than `limit` rows
-      // (Spark applies the global limit above), so cap the page request
-      // and stop once reached. Page OFFSETS stay pageSize-strided — a
-      // capped request just leaves the rest of that page unread.
-      val want =
-        if (limit >= 0) math.min(pageSize.toLong, limit - emitted) else pageSize.toLong
-      if (want <= 0) { exhausted = true }
-      else {
-        val fetched = fetcher.fetch(page.toLong * pageSize, want)
-        // A response shorter than the full page size is the end of the
-        // relation: every later page — anyone's stride — is empty, so
-        // this reader can stop. (A limit-capped request is always
-        // "short"; that conservatively stops after the capped page,
-        // which is exactly the pushed-limit behavior.)
-        if (fetched.size < pageSize) exhausted = true
-        page += stride
-        emitted += fetched.size
-        rows = fetched.iterator
-      }
+    while (!rows.hasNext && ahead.isDefined) {
+      val fetched = fetcher.rows(ahead.get, page.toLong * pageSize)
+      page += stride
+      emitted += fetched.size
+      // A response shorter than the full page size is the end of the
+      // relation: every later page — anyone's stride — is empty, so
+      // this reader can stop. (A limit-capped request is always
+      // "short"; that conservatively stops after the capped page,
+      // which is exactly the pushed-limit behavior.) Only a full page
+      // sends the next request, so fetching ahead sends exactly the
+      // requests a serial walk does.
+      ahead = if (fetched.size < pageSize) None else fetchNext()
+      rows = fetched.iterator
     }
     rows.hasNext
   }
 
   override def get(): InternalRow = rows.next()
-  override def close(): Unit = ()
+  override def close(): Unit = ahead.foreach(_.cancel())
 }
 
 /** The cursor walk is one partition by contract (each page's token only
@@ -682,11 +762,12 @@ private[sources] class HttpCursorReaderFactory(
   * inherently serial (page k+1's request token is only known from page
   * k's response), so the parallelism available is pipelining, not
   * striding — the next GET goes on the wire the moment the token is
-  * extracted from the current body, BEFORE the current page's rows are
-  * parsed and emitted, overlapping network latency with executor-side
-  * decode + downstream consumption. A single daemon thread carries the
-  * in-flight request; [[HttpPageFetcher.fetchBody]] is the thread-safe
-  * part, the Jackson row parse stays on the task thread.
+  * found in the current body, BEFORE the current page's rows are
+  * decoded and emitted, overlapping network latency with executor-side
+  * decode + downstream consumption. The GET runs on the shared
+  * fetch-ahead pool, like the offset readers'; one streaming pass over
+  * the envelope finds the token and the row array's bytes, which the
+  * task thread then decodes in place.
   *
   * Envelope contract: the response is an object whose `itemsField` is
   * the row array and whose `cursorField` is the next token; a missing/
@@ -707,16 +788,12 @@ private[sources] class HttpCursorReader(
   private val fetcher =
     new HttpPageFetcher(url, schemaDdl, cursorParam, limitParam, headers,
       extraQuery)
-  private val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
-  private val exec = java.util.concurrent.Executors.newSingleThreadExecutor(
-    (r: Runnable) => {
-      val t = new Thread(r, "graft-http-cursor-fetch"); t.setDaemon(true); t
-    })
+  private val envelopeFactory = new JsonFactory()
   private def enc(s: String) = java.net.URLEncoder.encode(s, "UTF-8")
 
   private var fetchedSoFar = 0L
 
-  private def submit(tok: Option[String]): java.util.concurrent.Future[String] = {
+  private def fetchAhead(tok: Option[String]): InFlight[Array[Byte]] = {
     // Pushed limit: never request more than the rows still missing —
     // `.limit(10)` costs one small page, not a full walk.
     val want =
@@ -724,45 +801,55 @@ private[sources] class HttpCursorReader(
       else pageSize.toLong
     val tail = tok.map(t => s"${enc(cursorParam)}=${enc(t)}&").getOrElse("") +
       s"$limitParam=$want"
-    exec.submit(
-      (() => fetcher.fetchBody(tail)): java.util.concurrent.Callable[String])
+    HttpPageFetcher.ahead(fetcher.fetchBody(tail))
   }
 
-  private var inFlight: java.util.concurrent.Future[String] = submit(None)
+  private var ahead: Option[InFlight[Array[Byte]]] = Some(fetchAhead(None))
   private var rows: Iterator[InternalRow] = Iterator.empty
 
-  override def next(): Boolean = {
-    while (!rows.hasNext && inFlight != null) {
-      val body = inFlight.get()
-      inFlight = null
-      val root = mapper.readTree(body)
-      val items = root.get(itemsField)
-      require(items != null && items.isArray,
+  /** The row array (a slice of `body`), its length and the next token. */
+  private def envelope(body: Array[Byte]): (ByteBuffer, Int, Option[String]) = {
+    val p = envelopeFactory.createParser(body)
+    try {
+      var items: ByteBuffer = null
+      var n = 0
+      var nextTok: Option[String] = None
+      if (p.nextToken() == JsonToken.START_OBJECT)
+        while (p.nextToken() == JsonToken.FIELD_NAME) {
+          val field = p.currentName()
+          val t = p.nextToken()
+          if (field == itemsField && t == JsonToken.START_ARRAY) {
+            val from = p.currentTokenLocation().getByteOffset.toInt
+            n = 0
+            while (p.nextToken() != JsonToken.END_ARRAY) { n += 1; p.skipChildren() }
+            items = ByteBuffer.wrap(body, from, p.currentLocation().getByteOffset.toInt - from)
+          } else if (field == cursorField && t.isScalarValue && t != JsonToken.VALUE_NULL)
+            nextTok = Some(p.getText).filter(_.nonEmpty)
+          else p.skipChildren()
+        }
+      require(items != null,
         s"graft-http cursor response has no array field '$itemsField' " +
           s"(set the 'itemsField' option to the row-array field name)")
-      val nextTok = Option(root.get(cursorField))
-        .filterNot(_.isNull).map(_.asText).filter(_.nonEmpty)
-      fetchedSoFar += items.size()
-      // fetch-ahead: issue the NEXT request before parsing THIS page
-      if (items.size() > 0 && nextTok.isDefined &&
-          (limit < 0 || fetchedSoFar < limit))
-        inFlight = submit(nextTok)
-      // items.toString + fetcher.parse re-serializes and re-parses the
-      // subtree the readTree above already built — two extra O(page)
-      // passes, accepted deliberately: pages are bounded by pageSize and
-      // the path is network-bound (fetch-ahead hides the wire, not CPU),
-      // while hand-converting JsonNode→InternalRow here would fork a
-      // second schema-mapping implementation away from the ONE
-      // JacksonParser every other graft-http path funnels through.
-      rows =
-        if (items.size() == 0) Iterator.empty
-        else fetcher.parse(items.toString).iterator
+      (items, n, nextTok)
+    } finally p.close()
+  }
+
+  override def next(): Boolean = {
+    while (!rows.hasNext && ahead.isDefined) {
+      val (items, n, nextTok) = envelope(ahead.get.await())
+      ahead = None
+      val pageStart = fetchedSoFar
+      fetchedSoFar += n
+      // fetch-ahead: issue the NEXT request before decoding THIS page
+      if (n > 0 && nextTok.isDefined && (limit < 0 || fetchedSoFar < limit))
+        ahead = Some(fetchAhead(nextTok))
+      rows = fetcher.parse(items, pageStart).iterator
     }
     rows.hasNext
   }
 
   override def get(): InternalRow = rows.next()
-  override def close(): Unit = { exec.shutdownNow(); () }
+  override def close(): Unit = ahead.foreach(_.cancel())
 }
 
 /** Batch write side of `graft-http` — the at-scale form of the
@@ -792,7 +879,9 @@ private[sources] class HttpCursorReader(
   * reference's Lambda retries and the foreachPartition sink
   * (`etl.HttpJson.sink`), here as a first-class DSv2 write with
   * per-task commit messages. Exactly-once needs a transactional
-  * receiver; HTTP alone cannot provide it.
+  * receiver; HTTP alone cannot provide it. Each task keeps one POST in
+  * flight while it fills the next batch; the contract is the same,
+  * because a task commits only after its last POST has succeeded.
   */
 private[sources] class HttpBatchWrite(
     schemaDdl: String, options: CaseInsensitiveStringMap) extends BatchWrite {
@@ -824,9 +913,13 @@ private[sources] case class HttpCommitMessage(partitionId: Int, rows: Long)
 
 /** One write task: serialize rows through Spark's JacksonGenerator (the
   * same engine `to_json` uses, symmetric with the reader's
-  * JacksonParser) and POST every `postBatchSize` rows. Retry policy
-  * mirrors [[HttpPageFetcher]]: 5xx/429/connection errors back off and
-  * retry, other 4xx fail fast (the request is wrong, not the weather).
+  * JacksonParser) into one UTF-8 buffer per batch, and POST every
+  * `postBatchSize` rows. The POST runs on the fetch-ahead pool while the
+  * task fills the next batch: one POST in flight, awaited before the
+  * next one is sent and in `commit()`, so a failed batch fails the task
+  * with its own exception. Retry policy mirrors [[HttpPageFetcher]]:
+  * 5xx/429/connection errors back off and retry, other 4xx fail fast
+  * (the request is wrong, not the weather).
   */
 private[sources] class HttpBatchWriter(
     url: String, schemaDdl: String, headers: Map[String, String],
@@ -834,50 +927,67 @@ private[sources] class HttpBatchWriter(
     maxRetries: Int = 3, backoffMs: Long = 200L)
     extends DataWriter[InternalRow] {
   require(postBatchSize > 0, s"postBatchSize must be positive, got $postBatchSize")
-  private val sw = new java.io.CharArrayWriter()
-  private val gen = new org.apache.spark.sql.catalyst.json.JacksonGenerator(
-    StructType.fromDDL(schemaDdl), sw,
-    new JSONOptions(Map.empty[String, String], "UTC", ""))
-  private val buf = new scala.collection.mutable.ArrayBuffer[String](postBatchSize)
+  private val batch = new ByteArrayOutputStream(1 << 16)
+  private val gen = HttpCodec.generator(
+    StructType.fromDDL(schemaDdl), new OutputStreamWriter(batch, UTF_8))
+  private var rowsInBatch = 0
   private var rowsWritten = 0L
   private var batchOrdinal = 0L
+  private var posting: Option[InFlight[Unit]] = None
 
   override def write(row: InternalRow): Unit = {
+    if (rowsInBatch > 0) gen.writeLineEnding()
     gen.write(row)
-    gen.flush()
-    buf += sw.toString
-    sw.reset()
+    rowsInBatch += 1
     rowsWritten += 1
-    if (buf.size >= postBatchSize) flushBatch()
+    if (rowsInBatch >= postBatchSize) flushBatch()
   }
 
-  private def flushBatch(): Unit = if (buf.nonEmpty) {
-    val body = buf.mkString("\n")
-    buf.clear()
-    // id = (partition, batch ordinal, content): content alone would give
-    // two legitimately-distinct but byte-identical batches the SAME id
-    // (a deduping receiver silently drops the second); position alone
-    // would miss task-retry replays. Position+content distinguishes
-    // repeats within an attempt and matches across retries WHEN the
-    // partition recomputes deterministically — after a shuffle with
-    // nondeterministic order, replays may carry fresh ids, which is the
-    // at-least-once contract (receiver-side keying on business ids is
-    // the remaining defence, as with any HTTP sink).
-    val idBytes = s"$partitionId:$batchOrdinal:$body".getBytes("UTF-8")
-    batchOrdinal += 1
+  private def flushBatch(): Unit = if (rowsInBatch > 0) {
+    gen.flush()
+    val body = batch.toByteArray
+    batch.reset()
+    rowsInBatch = 0
     val b = HttpRequest.newBuilder(URI.create(url))
-      .POST(HttpRequest.BodyPublishers.ofString(body))
+      .POST(HttpRequest.BodyPublishers.ofByteArray(body))
       .timeout(Duration.ofSeconds(60))
       .header("Content-Type", "application/json")
-      .header("X-Batch-Id", util.UUID.nameUUIDFromBytes(idBytes).toString)
+      .header("X-Batch-Id", batchId(body))
     headers.foreach { case (k, v) => b.header(k, v) }
     val req = b.build()
+    batchOrdinal += 1
+    awaitPost()
+    posting = Some(HttpPageFetcher.ahead(post(req)))
+  }
+
+  /** `UUID.nameUUIDFromBytes` of "partition:ordinal:body", hashed in
+    * parts. id = (partition, batch ordinal, content): content alone would
+    * give two legitimately-distinct but byte-identical batches the SAME id
+    * (a deduping receiver silently drops the second); position alone
+    * would miss task-retry replays. Position+content distinguishes
+    * repeats within an attempt and matches across retries WHEN the
+    * partition recomputes deterministically — after a shuffle with
+    * nondeterministic order, replays may carry fresh ids, which is the
+    * at-least-once contract (receiver-side keying on business ids is
+    * the remaining defence, as with any HTTP sink).
+    */
+  private def batchId(body: Array[Byte]): String = {
+    val md5 = java.security.MessageDigest.getInstance("MD5")
+    md5.update(s"$partitionId:$batchOrdinal:".getBytes(UTF_8))
+    val h = md5.digest(body)
+    h(6) = (h(6) & 0x0f | 0x30).toByte // version 3 (name-based, MD5)
+    h(8) = (h(8) & 0x3f | 0x80).toByte // IETF variant
+    val words = ByteBuffer.wrap(h)
+    new util.UUID(words.getLong, words.getLong).toString
+  }
+
+  private def post(req: HttpRequest): Unit = {
     var attempt = 0
     var done = false
     while (!done) {
       val outcome =
         try {
-          val resp = HttpJson.client.send(req, HttpResponse.BodyHandlers.ofString())
+          val resp = HttpJson.client.send(req, HttpResponse.BodyHandlers.discarding())
           val code = resp.statusCode()
           if (code / 100 == 2) Right(())
           else if (code == 429 || code / 100 == 5) Left(s"HTTP $code")
@@ -897,12 +1007,22 @@ private[sources] class HttpBatchWriter(
     }
   }
 
+  private def awaitPost(): Unit = {
+    posting.foreach(_.await())
+    posting = None
+  }
+
   override def commit(): WriterCommitMessage = {
     flushBatch()
+    awaitPost()
     HttpCommitMessage(partitionId, rowsWritten)
   }
   // batches already POSTed cannot be unsent — at-least-once by contract;
-  // drop only the unflushed tail
-  override def abort(): Unit = buf.clear()
+  // drop only the unflushed tail and stop waiting on the last POST
+  override def abort(): Unit = {
+    posting.foreach(_.cancel())
+    batch.reset()
+    rowsInBatch = 0
+  }
   override def close(): Unit = gen.close()
 }

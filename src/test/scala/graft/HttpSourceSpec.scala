@@ -51,6 +51,31 @@ class HttpSourceSpec extends AnyFunSuite with BeforeAndAfterAll {
   private val seenCursorQueries =
     java.util.Collections.synchronizedList(new java.util.ArrayList[String]())
 
+  private val stored =
+    java.util.Collections.synchronizedList(new java.util.ArrayList[String]())
+  private lazy val badDrones: Vector[String] = {
+    val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
+    val fixture = mapper.readTree(getClass.getResourceAsStream("/graft/drones.json"))
+    fixture.get(3).asInstanceOf[com.fasterxml.jackson.databind.node.ObjectNode].remove("callSign")
+    fixture.elements().asScala.map(mapper.writeValueAsString).toVector
+  }
+
+  /** Serves the `offset`/`limit` slice of `records` as a JSON array. */
+  private def servePage(exchange: com.sun.net.httpserver.HttpExchange,
+                        records: Seq[String]): Unit = {
+    val params = Option(exchange.getRequestURI.getQuery).getOrElse("").split("&")
+      .filter(_.contains("=")).map { kv => val Array(k, v) = kv.split("=", 2); k -> v }.toMap
+    val off = params.getOrElse("offset", "0").toInt
+    val lim = params.getOrElse("limit", "100").toInt
+    val bytes = records.slice(off, off + lim).mkString("[", ",", "]").getBytes("UTF-8")
+    exchange.sendResponseHeaders(200, bytes.length.toLong)
+    exchange.getResponseBody.write(bytes)
+    exchange.close()
+  }
+
+  private def causes(t: Throwable): Seq[Throwable] =
+    if (t == null) Seq.empty else t +: causes(t.getCause)
+
   lazy val spark: SparkSession = SparkSession.builder()
     .master("local[4]")
     .config("spark.sql.shuffle.partitions", "4")
@@ -166,6 +191,23 @@ class HttpSourceSpec extends AnyFunSuite with BeforeAndAfterAll {
         exchange.close()
       }
     })
+    // rejecting ingest: 400 for any body carrying a "reject" name
+    server.createContext("/ingest-reject", exchange => {
+      val body = new String(exchange.getRequestBody.readAllBytes(), "UTF-8")
+      exchange.sendResponseHeaders(if (body.contains("\"reject\"")) 400 else 200, -1)
+      exchange.close()
+    })
+    // store + serve back: /store keeps every JSON line POSTed to it, and
+    // /stored pages through them with offset/limit (the round-trip case)
+    server.createContext("/store", exchange => {
+      val body = new String(exchange.getRequestBody.readAllBytes(), "UTF-8")
+      body.split("\n").foreach(stored.add)
+      exchange.sendResponseHeaders(200, -1)
+      exchange.close()
+    })
+    server.createContext("/stored", servePage(_, stored.asScala.toVector))
+    // the DroneSense fixture with record 3's required callSign removed
+    server.createContext("/drones-bad", servePage(_, badDrones))
     // Cursor-token (keyset) paginated API: GET /cursor?cursor=T&limit=L
     // returns {"items":[...], "next_cursor": "id-<last>"} — the token is
     // the last served id, so pages are positions in a stable order and
@@ -593,6 +635,100 @@ class HttpSourceSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(seenQueries.asScala.exists(_.contains("limit=7")),
       s"no capped limit in: ${seenQueries.asScala.take(5)}")
     assert(requests.get() === 1)
+  }
+
+  test("fetch-ahead sends exactly the GETs of a serial walk") {
+    requests.set(0)
+    assert(read(pageSize = 50, numPartitions = 4).collect().length === TotalRows)
+    // pages 0-4 are full and page 5 is short; each reader stops after its
+    // first short page: p0 reads 0,4,8; p1 1,5; p2 2,6; p3 3,7
+    assert(requests.get() === 9)
+  }
+
+  test("a record missing a NOT NULL column fails the read, naming column and page") {
+    val e = intercept[Exception] {
+      spark.read.format("graft-http")
+        .option("url", s"http://127.0.0.1:$port/drones-bad")
+        .option("schema", graft.etl.DroneSense.droneSchema.toDDL)
+        .option("pageSize", "2").option("numPartitions", "1")
+        .load().collect()
+    }
+    assert(causes(e).exists(c => Option(c.getMessage).exists(m =>
+      m.contains("required column 'callSign'") && m.contains("page at offset 2"))),
+      causes(e).map(_.getMessage).mkString("\n"))
+  }
+
+  test("doubles round-trip bit for bit through the graft-http writer and reader") {
+    import spark.implicits._
+    import com.fasterxml.jackson.core.{JsonFactory, StreamReadFeature, StreamWriteFeature}
+    val codec = graft.sources.HttpCodec
+    assert(codec.openParser(new JsonFactory(), java.nio.ByteBuffer.wrap("[0.1]".getBytes("UTF-8")))
+      .isEnabled(StreamReadFeature.USE_FAST_DOUBLE_PARSER))
+    val gen = codec.generator(
+      org.apache.spark.sql.types.StructType.fromDDL("v DOUBLE"), new java.io.StringWriter)
+    assert(org.apache.spark.sql.JacksonShim.jsonGenerator(gen)
+      .isEnabled(StreamWriteFeature.USE_FAST_DOUBLE_WRITER))
+
+    val rng = new scala.util.Random(20261017L)
+    val random = Iterator.continually(java.lang.Double.longBitsToDouble(rng.nextLong()))
+      .filterNot(d => d.isNaN || d.isInfinite).take(10000)
+    val values = Seq(0.1, 2e-3, 1e23, 4.9e-324, Double.MaxValue, -0.0) ++ random
+    stored.clear()
+    values.zipWithIndex.map { case (v, i) => (i.toLong, v) }.toDF("id", "v")
+      .repartition(3)
+      .write.format("graft-http")
+      .option("url", s"http://127.0.0.1:$port/store")
+      .option("schema", "id LONG, v DOUBLE")
+      .option("postBatchSize", "500")
+      .mode("append").save()
+    val back = spark.read.format("graft-http")
+      .option("url", s"http://127.0.0.1:$port/stored")
+      .option("schema", "id LONG, v DOUBLE")
+      .option("pageSize", "1000").option("numPartitions", "4")
+      .load().collect().map(r => r.getLong(0).toInt -> r.getDouble(1)).toMap
+    assert(back.size === values.size)
+    val bits = java.lang.Double.doubleToRawLongBits _
+    val wrong = values.indices.filter(i => bits(back(i)) != bits(values(i)))
+    assert(wrong.isEmpty, wrong.take(5).map(i => s"${values(i)} -> ${back(i)}").mkString(", "))
+  }
+
+  test("a batch the receiver rejects fails save() with the POST's own message") {
+    import spark.implicits._
+    val url = s"http://127.0.0.1:$port/ingest-reject"
+    // batches of 3: row 4 is in the middle batch, which surfaces when the
+    // next POST waits for it; row 7 is in the last, which commit() awaits
+    for (rejected <- Seq(4, 7)) {
+      val e = intercept[Exception] {
+        (0 until 9).map(i => (i.toLong, if (i == rejected) "reject" else s"r-$i"))
+          .toDF("id", "name").coalesce(1)
+          .write.format("graft-http")
+          .option("url", url)
+          .option("schema", "id LONG, name STRING")
+          .option("postBatchSize", "3")
+          .mode("append").save()
+      }
+      val chain = causes(e)
+      assert(chain.exists(c => c.isInstanceOf[IllegalStateException] &&
+        c.getMessage == s"graft-http POST $url failed: HTTP 400"),
+        chain.map(_.toString).mkString("\n"))
+      assert(!chain.exists(_.isInstanceOf[java.util.concurrent.ExecutionException]))
+    }
+  }
+
+  test("X-Batch-Id is the name UUID of partition:ordinal:body") {
+    import spark.implicits._
+    ingested.clear()
+    (0L until 6L).map(i => (i, s"b-$i")).toDF("id", "name").coalesce(1)
+      .write.format("graft-http")
+      .option("url", s"http://127.0.0.1:$port/ingest")
+      .option("schema", "id LONG, name STRING")
+      .option("postBatchSize", "3")
+      .mode("append").save()
+    // one POST in flight per task: batches arrive in ordinal order
+    val batches = ingested.asScala.toSeq
+    assert(batches.size === 2)
+    for (((id, body), ord) <- batches.zipWithIndex)
+      assert(id === java.util.UUID.nameUUIDFromBytes(s"0:$ord:$body".getBytes("UTF-8")).toString)
   }
 
   test("DSv2 write POSTs every row as JSON-lines batches with idempotency ids") {
