@@ -80,7 +80,10 @@ object Windows {
         .orderBy(col("c_acctbal").desc, col("c_custkey").desc)
       val local = Tables(s, dir, "customer")
         .select(col("c_custkey"), col("c_acctbal"))
-        .withColumn("_b", floor(col("c_acctbal") / bandW).cast("long"))
+        // a null balance sorts first ascending, so it gets the lowest
+        // band; a null band key would fall out of the join on _b below
+        .withColumn("_b", coalesce(floor(col("c_acctbal") / bandW).cast("long"),
+          lit(Long.MinValue)))
         .withColumn("_rn", row_number().over(wB))   // band row number
         .withColumn("_rk", rank().over(wB))         // band rank (ties)
         .withColumn("_rkd", rank().over(wBd))       // 1 + rows strictly after

@@ -13,7 +13,8 @@ ones, each as `python3 perfbench/run.py` in its own checkout (which
 builds that checkout from source on its first run).
 
 For every metric it prints each side's median and quartiles and the
-fraction of pairs the change won (ties count for neither side). An
+fraction of pairs the change won (ties count for neither side), and each
+run's wall-clock seconds (build included) with each side's total. An
 end-to-end metric is flagged REGRESSION when the change's median is worse
 than the parent's by more than its BENCHMARK.json bound, and UNRESOLVED
 when the parent's own quartile spread is wider than the bound (unless
@@ -27,6 +28,7 @@ import statistics
 import subprocess
 import sys
 import tempfile
+import time
 from pathlib import Path
 
 REPO = Path(__file__).resolve().parent.parent
@@ -50,7 +52,9 @@ def parent_checkout(rev, workdir):
 
 
 def run_once(checkout, workload, seed, seconds, trace):
-    """One perfbench run; returns its result JSON (the last stdout line)."""
+    """One perfbench run; returns its result JSON (the last stdout line) and
+    the run's wall-clock seconds."""
+    start = time.monotonic()
     proc = subprocess.run(
         [sys.executable, "perfbench/run.py", "--workload", workload, "--seed", str(seed),
          "--seconds", str(seconds), "--trace", str(trace)],
@@ -59,7 +63,7 @@ def run_once(checkout, workload, seed, seconds, trace):
     if proc.returncode != 0 or not lines:
         sys.stderr.write(proc.stdout[-3000:] + proc.stderr[-3000:])
         sys.exit(f"perf_ab: run failed in {checkout} (seed {seed})")
-    return json.loads(lines[-1])
+    return json.loads(lines[-1]), time.monotonic() - start
 
 
 def quartiles(xs):
@@ -127,16 +131,20 @@ def main():
     sha, parent = parent_checkout(a.parent, Path(a.workdir))
     sides = {"parent": parent, "change": Path(a.change).resolve()}
     runs = {"parent": [], "change": []}
+    wall = {"parent": 0.0, "change": 0.0}
     for i in range(a.pairs):
         order = ("parent", "change") if i % 2 == 0 else ("change", "parent")
         for side in order:
-            res = run_once(sides[side], a.workload, a.seed + i, seconds, a.trace)
+            res, secs = run_once(sides[side], a.workload, a.seed + i, seconds, a.trace)
             runs[side].append(res)
+            wall[side] += secs
             m = res["metrics"]
             headline = "pass_s" if "pass_s" in m else next(iter(m))
             print(f"pair {i} seed {a.seed + i} {side}: {headline} {m[headline]['value']:.4g} "
-                  f"failed {res['failed']}/{res['attempted']}", flush=True)
+                  f"failed {res['failed']}/{res['attempted']} wall {secs:.1f} s", flush=True)
     print(f"\n{a.workload}: {a.pairs} pairs at {seconds} s, parent {sha[:12]} vs {sides['change']}")
+    print(f"wall clock: parent {wall['parent']:.0f} s, change {wall['change']:.0f} s, "
+          f"total {wall['parent'] + wall['change']:.0f} s")
     ok = report(runs, declared, a.claim)
     if a.out:
         Path(a.out).write_text(json.dumps({"workload": a.workload, "parent": sha, "seconds": seconds,
